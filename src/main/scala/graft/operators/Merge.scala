@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, Literal, Not}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
@@ -40,8 +40,9 @@ case class MergeClauses(
 
 object MergeClauses {
   sealed trait Action
-  /** UPDATE SET * — every source column overwrites; target-only columns
-    * null-backfill (matching the legacy updateAll path's rendering).
+  /** UPDATE SET * — every source column overwrites; a target-only
+    * column keeps its pre-image (SQL/Delta semantics, and the invariant
+    * identity columns depend on).
     */
   case object UpdateAll extends Action
   case class UpdateSet(assigns: Seq[(String, Expression)]) extends Action
@@ -67,10 +68,14 @@ object MergeClauses {
   *     everything else is carried into the new version untouched. An
   *     incremental batch touching 0.1% of the key space rewrites ~0.1%
   *     of the files, not the table.
-  *  2. **Single shuffle** — both sides are struct-packed and full-outer
-  *     joined on the primary key once; matched/unmatched routing is pure
-  *     column logic on top (codegen-friendly, AQE/skew-join eligible) —
-  *     no second anti-join pass over the target.
+  *  2. **One executor, at most one shuffle** — the builder flags and
+  *     SQL both lower to one ordered [[MergeClauses]] list. Both sides
+  *     are struct-packed and full-outer joined on the primary key once;
+  *     matched/unmatched routing is pure column logic on top
+  *     (codegen-friendly, AQE/skew-join eligible). A small batch of the
+  *     upsert shape (`UPDATE SET *` + `INSERT *`, optionally with the
+  *     CDC delete) instead broadcasts its keys and anti-joins the
+  *     target, which shuffles no target rows at all.
   *  3. **Schema evolution** — output schema is target ∪ source
   *     (SURVEY §1.3); columns missing on either side are null-backfilled.
   *  4. **Atomic swap** — new files + surviving files become version N+1
@@ -84,7 +89,7 @@ object MergeBuilder {
     * 400 MB — so [[BroadcastSourceBytes]] caps the ESTIMATED broadcast
     * size too (per-row key width from the schema's type sizes + row
     * overhead), and wide-key batches fall back to the single-shuffle
-    * general path instead of flooding the driver.
+    * executor instead of flooding the driver.
     */
   val BroadcastSourceRows: Long = 4000000L
   val BroadcastSourceBytes: Long = 128L * 1024 * 1024
@@ -154,7 +159,7 @@ class MergeBuilder(
 
   private var updateAll = false
   private var insertAll = false
-  private var deleteCond: Option[Column] = None
+  private var deleteCond: Option[Expression] = None
   private var changeFeed = false
   private var txnId: Option[String] = None
   private var txnApp: Option[String] = None
@@ -178,14 +183,6 @@ class MergeBuilder(
     */
   def withTxnMarker(appId: String, marker: String): MergeBuilder = {
     txnId = Some(marker); txnApp = Some(appId); this
-  }
-
-  /** Legacy raw-marker form (no appId → no index entry; replay checks
-    * fall back to the full-history scan and forget markers past the
-    * vacuum horizon). Prefer the two-argument form.
-    */
-  def withTxnMarker(marker: String): MergeBuilder = {
-    txnId = Some(marker); this
   }
 
   /** SQL `WITH SCHEMA EVOLUTION` switch. `false` (the SQL statement
@@ -222,32 +219,39 @@ class MergeBuilder(
     */
   def withChangeFeed(): MergeBuilder = { changeFeed = true; this }
 
-  /** ref :208 — overwrite all columns of matched rows with source values. */
+  /** ref :208 — `WHEN MATCHED THEN UPDATE SET *`: overwrite all source
+    * columns of matched rows.
+    */
   def whenMatchedUpdateAll(): MergeBuilder = { updateAll = true; this }
 
-  /** ref :209 — insert source rows with no target match. */
+  /** ref :209 — `WHEN NOT MATCHED THEN INSERT *`: insert source rows
+    * with no target match.
+    */
   def whenNotMatchedInsertAll(): MergeBuilder = { insertAll = true; this }
 
-  /** Corrected CDC mode: matched source rows satisfying `condSql`
-    * (evaluated against source columns, e.g. "SyncOperation = 'D'") are
-    * deleted from the target; such rows are never inserted either.
+  /** Corrected CDC mode: matched source rows satisfying `condSql` are
+    * deleted from the target, and such rows are never inserted either.
+    * execute() lowers the flags to this ordered clause list (each star
+    * clause only when its flag is set):
+    *
+    *   WHEN MATCHED AND cond THEN DELETE
+    *   WHEN MATCHED THEN UPDATE SET *
+    *   WHEN NOT MATCHED AND NOT coalesce(cond, false) THEN INSERT *
+    *
+    * Every name in `condSql` binds to the SOURCE row (e.g.
+    * "SyncOperation = 'D'"), even where the target has a column of the
+    * same name. A NULL verdict means "not deleted": the row updates or
+    * inserts like any other.
     */
-  def whenMatchedDelete(condSql: String): MergeBuilder =
-    whenMatchedDelete(expr(condSql))
-
-  /** Column form of [[whenMatchedDelete]] — the SQL MERGE INTO path
-    * arrives here with an already-parsed condition.
-    */
-  def whenMatchedDelete(cond: Column): MergeBuilder = {
-    deleteCond = Some(cond); this
+  def whenMatchedDelete(condSql: String): MergeBuilder = {
+    deleteCond = Some(parse(condSql)); this
   }
 
   // ---- clause-level API (standard SQL / Delta semantics) ----
-  // Distinct from the legacy flags above: the legacy delete mode is the
-  // CDC quirk surface (delete-marked rows are never inserted either);
-  // clauses follow SQL MERGE exactly (each row class evaluated
-  // independently, first applying clause wins). Mixing the two APIs in
-  // one merge errors loudly at execute().
+  // Each row class evaluates its ordered clause list independently; the
+  // first clause whose condition holds applies. The flags above lower
+  // onto the same list, so mixing the two APIs in one merge is
+  // ambiguous and errors loudly at execute().
 
   private var clauseState = MergeClauses()
 
@@ -285,9 +289,9 @@ class MergeBuilder(
   }
 
   /** `WHEN MATCHED [AND cond] THEN DELETE`, clause form — standard SQL
-    * semantics (each row class independent; an unmatched delete-marked
-    * source row can still INSERT), unlike the legacy
-    * [[whenMatchedDelete]] CDC quirk mode which also gates inserts.
+    * semantics: the condition may read both sides, and an unmatched
+    * delete-marked source row can still INSERT (the lowering of
+    * [[whenMatchedDelete]] guards the insert as well).
     */
   def whenMatchedDeleteClause(cond: Option[String] = None): MergeBuilder = {
     clauseState = clauseState.copy(matched = clauseState.matched :+
@@ -326,10 +330,12 @@ class MergeBuilder(
     this
   }
 
-  /** Everything the legacy and clause paths share: schema unification,
-    * stats/bloom file pruning, the DV-masked read of the touched files.
+  /** Everything the executor and its broadcast fast path share: the
+    * clause list, schema unification, stats/bloom file pruning, the
+    * DV-masked read of the touched files.
     */
   private case class Prep(
+      mc: MergeClauses,
       m: Manifest, targetSchema: StructType, sourceSchema: StructType,
       unified: StructType, statsCols: Seq[String],
       writeMapping: Map[String, String], touched: Seq[ManifestFile],
@@ -359,8 +365,7 @@ class MergeBuilder(
           conformTo = Some(p.unified))
       else table.writeDataFiles(p.arranged(result), p.statsCols,
         p.writeMapping, conformTo = Some(p.unified))
-    val staged = stageChanges(p.target, newFiles, p.unified, p.writeMapping,
-      p.srcRows, p.targetSchema)
+    val staged = stageChanges(p, newFiles)
     val v = table.swap(p.touched.map(_.path).toSet, newFiles, p.unified,
       p.m.version, p.overlapsF, txnId, txnApp)
     staged.foreach(table.publishChangeFeed(v, _))
@@ -370,33 +375,132 @@ class MergeBuilder(
 
   /** Run the merge; returns the newly committed version. */
   def execute(): Long =
-    try executeImpl()
+    try executeImpl(lowered)
     finally if (ownedCache) source.unpersist(false)
 
-  private def executeImpl(): Long = {
-    if (clauseState.nonEmpty && (updateAll || insertAll || deleteCond.isDefined))
+  /** The clause list execute() runs: the flag API lowered as documented
+    * on [[whenMatchedDelete]], or the clause API as built.
+    */
+  private def lowered: MergeClauses = {
+    import MergeClauses._
+    if (!updateAll && !insertAll && deleteCond.isEmpty) return clauseState
+    if (clauseState.nonEmpty)
       throw new IllegalArgumentException(
         "cannot mix the clause-level MERGE API (whenMatchedUpdate/" +
           "whenNotMatchedInsert/whenNotMatchedBySource*) with " +
           "updateAll/insertAll/whenMatchedDelete in one merge")
+    // the flag condition reads the source row only: qualify every name
+    // with `source`, one of MergeClauses' default source qualifiers
+    val del = deleteCond.map(_.transformUp {
+      case a: UnresolvedAttribute => UnresolvedAttribute("source" +: a.nameParts)
+    })
+    MergeClauses(
+      matched = del.map(c => Clause(Some(c), Delete)).toSeq ++
+        (if (updateAll) Seq(Clause(None, UpdateAll)) else Nil),
+      notMatched =
+        if (insertAll) Seq(Clause(del.map(notDeleted), InsertAll)) else Nil)
+  }
+
+  /** The insert guard paired with a `WHEN MATCHED AND c THEN DELETE`. */
+  private def notDeleted(c: Expression): Expression =
+    Not(Coalesce(Seq(c, Literal.FalseLiteral)))
+
+  /** Some(delete verdict over the bare source frame) when `mc` is the
+    * upsert shape the broadcast-anti fast path computes exactly:
+    *
+    *   [WHEN MATCHED AND c THEN DELETE] WHEN MATCHED THEN UPDATE SET *
+    *   WHEN NOT MATCHED [AND NOT coalesce(c, false)] THEN INSERT *
+    *
+    * with no residual ON, no BY SOURCE clause, and a `c` that reads
+    * source columns only. `lit(false)` without a delete clause.
+    */
+  private def upsertDelete(mc: MergeClauses,
+      tNames: Seq[String], sNames: Seq[String]): Option[Column] = {
+    import MergeClauses._
+    val del: Option[Option[Expression]] = mc.matched match {
+      case Seq(Clause(None, UpdateAll)) => Some(None)
+      case Seq(Clause(Some(c), Delete), Clause(None, UpdateAll)) => Some(Some(c))
+      case _ => None
+    }
+    def has(names: Seq[String], n: String) = names.exists(_.equalsIgnoreCase(n))
+    def qual(p: Seq[String]) = if (p.length > 1) p.head.toLowerCase else ""
+    // the executor's resolution order: target qualifier, source
+    // qualifier, then membership (a name both sides have is its
+    // ambiguity error, so it never takes the fast path)
+    def readsSource(p: Seq[String]) =
+      !mc.targetQuals.contains(qual(p)) && (mc.sourceQuals.contains(qual(p)) ||
+        has(sNames, p.head) && !has(tNames, p.head))
+    def onSource(c: Expression): Option[Expression] =
+      if (!c.collect { case a: UnresolvedAttribute => a.nameParts }.forall(readsSource))
+        None
+      else Some(c.transformUp {
+        case a: UnresolvedAttribute if mc.sourceQuals.contains(qual(a.nameParts)) =>
+          UnresolvedAttribute(a.nameParts.tail)
+      })
+    del.filter(c => mc.onResidual.isEmpty && mc.notMatchedBySource.isEmpty &&
+        mc.notMatched == Seq(Clause(c.map(notDeleted), InsertAll)))
+      .flatMap {
+        case None => Some(lit(false))
+        // NULL must read as "not deleted", as in the executor: without
+        // the coalesce the fast path's filter(!del) drops the row (NULL
+        // is not true) while still anti-joining away its target match
+        case Some(c) => onSource(c).map(e =>
+          coalesce(ColumnBridge.toColumn(e), lit(false)))
+      }
+  }
+
+  private def executeImpl(mc: MergeClauses): Long = {
+    import MergeClauses._
     val spark = table.spark
     val m = table.latestManifest.getOrElse(
       throw new IllegalStateException(s"merge into uncommitted table ${table.root}"))
     val targetSchema = StructType.fromDDL(m.schema)
     val sourceSchema = source.schema
+    mc.notMatchedBySource.foreach {
+      case Clause(_, UpdateAll) | Clause(_, InsertAll) | Clause(_, InsertValues(_)) =>
+        throw new IllegalArgumentException(
+          "WHEN NOT MATCHED BY SOURCE supports UPDATE SET col = expr and " +
+            "DELETE only (there is no source row to read)")
+      case _ => ()
+    }
     // partition columns stay LAST on pv tables through evolution — the
     // scan serves dataSchema ++ partitionSchema in that order
-    val unified = GraftTable.pvOrdered(
+    val union = GraftTable.pvOrdered(
       GraftTable.unionSchema(targetSchema, sourceSchema),
       table.pvPartitionCols(m))
+    // every assignment target must be a target-or-source column — a
+    // typo'd SET/INSERT column would otherwise silently no-op
+    val assignKeys =
+      (mc.matched ++ mc.notMatched ++ mc.notMatchedBySource).flatMap(_.action match {
+        case UpdateSet(a) => a.map(_._1)
+        case InsertValues(a) => a.map(_._1)
+        case _ => Nil
+      })
+    assignKeys.find(k => !union.fieldNames.exists(_.equalsIgnoreCase(k))).foreach(k =>
+      throw new IllegalArgumentException(
+        s"MERGE assignment to unknown column `$k` " +
+          s"(table ∪ source columns: ${union.fieldNames.mkString(", ")})"))
+    // Schema evolution (Delta parity): `SET *` / `INSERT *` pulls in
+    // every source column, but explicit assignments evolve the schema
+    // ONLY with the columns they actually assign — an unreferenced
+    // source column (a join helper, a CDC op code) must not become a
+    // permanent all-NULL table column.
+    val star = (mc.matched ++ mc.notMatched).exists(_.action match {
+      case UpdateAll | InsertAll => true
+      case _ => false
+    })
+    val unified =
+      if (star) union
+      else GraftTable.pvOrdered(
+        StructType(targetSchema.fields ++ sourceSchema.fields.filter(f =>
+          !targetSchema.fieldNames.exists(_.equalsIgnoreCase(f.name)) &&
+            assignKeys.exists(_.equalsIgnoreCase(f.name)))),
+        table.pvPartitionCols(m))
     // WITHOUT schema evolution the target schema is a hard ceiling: a
-    // merge whose OUTPUT would widen it (star clauses over a wider
-    // source, or the legacy updateAll/insertAll path) errors loudly.
-    // Merely REFERENCING a source-only column in a clause expression is
-    // fine — it never lands (executeClauses re-checks on its narrower
-    // evolved schema for exactly that reason).
-    if (!clauseState.nonEmpty)
-      requireNoWidening(targetSchema, unified)
+    // merge whose OUTPUT would widen it errors loudly. Merely REFERENCING
+    // a source-only column in a clause expression is fine — it never
+    // lands, so the check runs on the evolved schema above.
+    requireNoWidening(targetSchema, unified)
     val statsCol = pkCols.head
     // partitioned tables: merge output keeps the partition clustering and
     // partition-column stats, so the layout survives incremental loads.
@@ -453,7 +557,7 @@ class MergeBuilder(
     // does NOT mention may be rewritten, and those live in exactly the
     // files the key-range prune would skip. Every concurrently added file
     // then conflicts too (overlapsF = always).
-    val pruneDisabled = clauseState.notMatchedBySource.nonEmpty
+    val pruneDisabled = mc.notMatchedBySource.nonEmpty
     val allFiles = table.filesOf(m)
     val (rangeTouched, _) =
       if (pruneDisabled) (allFiles, Nil) else allFiles.partition(overlaps)
@@ -507,29 +611,25 @@ class MergeBuilder(
           GraftTable.plusRowId(targetSchema, tracking))
       else table.readForRewrite(m, touched, targetSchema)
 
-    val prep = Prep(m, targetSchema, sourceSchema, unified, statsCols,
+    val prep = Prep(mc, m, targetSchema, sourceSchema, unified, statsCols,
       writeMapping, touched, target, srcRows, overlapsF, arranged)
-    if (clauseState.nonEmpty) return executeClauses(prep)
 
-    // NULL delete-conditions must read as "not deleted" on every path:
-    // without the coalesce the fast path's filter(!delCol) drops the row
-    // (NULL is not true) while still anti-joining away its target match —
-    // i.e. a NULL turns into a delete only when the batch is small.
-    val delCol = deleteCond
-      .map(c => coalesce(c, lit(false)))
-      .getOrElse(lit(false))
-
-    // ---- fast path: the reference's universal mode (updateAll+insertAll)
-    // reduces to `target ANTI source.keys ∪ source\deletes` — and an anti
-    // join CAN broadcast a small incremental batch, where the general
+    // ---- fast path: the reference's upsert shape (UPDATE SET * +
+    // INSERT *, optionally with the CDC delete) reduces to
+    // `target ANTI source.keys ∪ source\deletes` — and an anti join CAN
+    // broadcast a small incremental batch, where the executor's
     // full-outer join always shuffles both sides. A 1k-row CDC batch
     // against a 100 TB table then touches only the pruned files, with no
     // shuffle of the target at all.
-    if (updateAll && insertAll &&
-      targetSchema.fieldNames.forall(n =>
-        sourceSchema.fieldNames.exists(_.equalsIgnoreCase(n))) &&
-      MergeBuilder.broadcastable(
-        srcRows, MergeBuilder.keyWidthBytes(targetSchema, pkCols))) {
+    val upsert = upsertDelete(mc, targetSchema.fieldNames, sourceSchema.fieldNames)
+    if (upsert.isEmpty ||
+      !targetSchema.fieldNames.forall(n =>
+        sourceSchema.fieldNames.exists(_.equalsIgnoreCase(n))) ||
+      !MergeBuilder.broadcastable(
+        srcRows, MergeBuilder.keyWidthBytes(targetSchema, pkCols)))
+      executeClauses(prep)
+    else {
+      val delCol = upsert.get
       // Per-key source counts ride the same broadcast that drives the
       // anti-join semantics: a matched key seen >1 times in the source
       // raises Delta's multiple-match error mid-scan, while unmatched
@@ -574,142 +674,20 @@ class MergeBuilder(
         .select(unified.fieldNames.map(col).toIndexedSeq ++
           (if (tracking) Seq(col(s"`${GraftTable.RowIdCol}`"),
             col(s"`${GraftTable.RowCommitCol}`")) else Nil): _*)
-      return commitResult(prep, result)
+      commitResult(prep, result)
     }
-
-    val tPacked = targetSchema.fieldNames.toSeq ++
-      (if (tracking) Seq(GraftTable.RowIdCol, GraftTable.RowCommitCol) else Nil)
-    val t = target.select(
-      pkCols.map(col) :+ struct(tPacked.map(c => col(s"`$c`")).toIndexedSeq: _*).as("__t"): _*)
-    // per-key source multiplicity for the multiple-match guard; the window
-    // hash-partitions on the pk, which the full-outer join needs anyway,
-    // so no extra exchange is introduced
-    val srcW = org.apache.spark.sql.expressions.Window
-      .partitionBy(pkCols.map(col).toIndexedSeq: _*)
-    val s = source
-      .withColumn("__del", delCol)
-      .withColumn("__srcn", count(lit(1)).over(srcW))
-      .withColumn("__srn", row_number().over(srcW.orderBy(lit(1))))
-      .select(pkCols.map(col) :+
-        struct((sourceSchema.fieldNames.map(col) :+ col("__del") :+
-          col("__srcn") :+ col("__srn")).toIndexedSeq: _*).as("__s"): _*)
-
-    val j = t.join(s, pkCols, "full_outer")
-    val matched = col("__t").isNotNull && col("__s").isNotNull
-    val tOnly = col("__s").isNull
-    val sOnly = col("__t").isNull
-    val isDel = coalesce(col("__s").getField("__del"), lit(false))
-
-    // matched rows always survive (updated or kept) unless delete-marked;
-    // source-only rows land only in insert mode and never when delete-marked.
-    // Multiple source rows for one matched target: with a matched clause
-    // (update/delete) the outcome is ambiguous — Delta raises a multiple-
-    // match error and so do we (mid-scan, no extra pass). WITHOUT a
-    // matched clause (insert-only merge) Delta does no such check; the
-    // target row must then come through exactly once, so only the first
-    // joined duplicate keeps it (all render identical target fields).
-    val hasMatchedClause = updateAll || deleteCond.isDefined
-    val matchedKeep =
-      if (hasMatchedClause) matched && !isDel
-      else matched && col("__s").getField("__srn") === 1
-    val keepBase =
-      tOnly || matchedKeep || (sOnly && lit(insertAll) && !isDel)
-    val keep =
-      if (hasMatchedClause)
-        when(matched && col("__s").getField("__srcn") > 1,
-          raise_error(lit(MergeBuilder.MultiMatchError)).cast("boolean"))
-          .otherwise(keepBase)
-      else keepBase
-
-    def fieldOf(sideStruct: String, schema: StructType, f: StructField): Column =
-      if (schema.fieldNames.contains(f.name)) col(sideStruct).getField(f.name)
-      else lit(null).cast(f.dataType)
-
-    val outCols = unified.fields.map { f =>
-      if (pkCols.contains(f.name)) col(f.name).cast(f.dataType).as(f.name)
-      else {
-        val fromT = fieldOf("__t", targetSchema, f)
-        val fromS = fieldOf("__s", sourceSchema, f)
-        // UPDATE SET * assigns the SOURCE columns; a target-only column
-        // keeps its pre-image on matched rows (SQL/Delta semantics — and
-        // the invariant identity columns depend on). Inserted rows
-        // null-backfill it as before.
-        val matchedVal =
-          if (updateAll && sourceSchema.fieldNames.contains(f.name)) fromS
-          else fromT
-        when(tOnly, fromT)
-          .when(matched, matchedVal)
-          .otherwise(fromS) // sOnly insert
-          .as(f.name)
-      }
-    }
-    // surviving target rows (kept or updated) carry their id; inserts
-    // render NULL and draw fresh ids from the file's range at read
-    // time. The last-modified version survives only on rows this merge
-    // did NOT touch (kept matched rows exist only without updateAll);
-    // updated/inserted rows reset to NULL → the new commit's default.
-    val rowIdOut =
-      if (!tracking) Nil
-      else Seq(
-        when(!sOnly, col("__t").getField(GraftTable.RowIdCol))
-          .otherwise(lit(null).cast("long")).as(GraftTable.RowIdCol),
-        when(tOnly || (matched && lit(!updateAll)),
-          col("__t").getField(GraftTable.RowCommitCol))
-          .otherwise(lit(null).cast("long")).as(GraftTable.RowCommitCol))
-    val result = j.filter(keep).select((outCols.toSeq ++ rowIdOut).toIndexedSeq: _*)
-
-    // ---- 3. write new files, 4. atomic swap ----
-    commitResult(prep, result)
   }
 
-  /** Clause-level MERGE (standard SQL semantics) over the same
-    * struct-packed single full-outer join as the legacy path. Each row
-    * class evaluates its ordered clause list; the first clause whose
-    * condition holds decides keep/drop and the output values, all as
-    * pure column logic (codegen-friendly, one shuffle).
+  /** The MERGE executor (standard SQL semantics): both sides are
+    * struct-packed and full-outer joined on the key once. Each row class
+    * evaluates its ordered clause list; the first clause whose condition
+    * holds decides keep/drop and the output values, all as pure column
+    * logic (codegen-friendly, one shuffle).
     */
   private def executeClauses(p: Prep): Long = {
     import MergeClauses._
-    val mc = clauseState
-    mc.notMatchedBySource.foreach {
-      case Clause(_, UpdateAll) | Clause(_, InsertAll) | Clause(_, InsertValues(_)) =>
-        throw new IllegalArgumentException(
-          "WHEN NOT MATCHED BY SOURCE supports UPDATE SET col = expr and " +
-            "DELETE only (there is no source row to read)")
-      case _ => ()
-    }
-    // every assignment target must be a target-or-source column — a
-    // typo'd SET/INSERT column would otherwise silently no-op
-    val assignKeys =
-      (mc.matched ++ mc.notMatched ++ mc.notMatchedBySource).flatMap(_.action match {
-        case UpdateSet(a) => a.map(_._1)
-        case InsertValues(a) => a.map(_._1)
-        case _ => Nil
-      })
-    assignKeys.find(k => !p.unified.fieldNames.exists(_.equalsIgnoreCase(k))).foreach(k =>
-      throw new IllegalArgumentException(
-        s"MERGE assignment to unknown column `$k` " +
-          s"(table ∪ source columns: ${p.unified.fieldNames.mkString(", ")})"))
-    // Schema evolution, clause form (Delta parity): `SET *` / `INSERT *`
-    // pulls in every source column, but explicit assignments evolve the
-    // schema ONLY with the columns they actually assign — an unreferenced
-    // source column (a join helper, a CDC op code) must not become a
-    // permanent all-NULL table column.
-    val star = (mc.matched ++ mc.notMatched).exists(_.action match {
-      case UpdateAll | InsertAll => true
-      case _ => false
-    })
-    val unified =
-      if (star) p.unified
-      else GraftTable.pvOrdered(
-        StructType(p.targetSchema.fields ++ p.sourceSchema.fields.filter(f =>
-          !p.targetSchema.fieldNames.exists(_.equalsIgnoreCase(f.name)) &&
-            assignKeys.exists(_.equalsIgnoreCase(f.name)))),
-        table.pvPartitionCols(p.m))
-    requireNoWidening(p.targetSchema, unified)
-    val writeMapping =
-      GraftTable.derivedMapping(unified.fieldNames.toSeq, Some(p.m))
-    val p2 = p.copy(unified = unified, writeMapping = writeMapping)
+    val mc = p.mc
+    val unified = p.unified
 
     // ---- expression resolution against the joined frame ----
     // target refs → __t.<field> (pre-image), source refs → __s.<field>;
@@ -924,7 +902,7 @@ class MergeBuilder(
           .otherwise(lit(null).cast("long")).as(GraftTable.RowCommitCol))
     val result = j.filter(keep)
       .select((outCols.toSeq ++ rowIdOut).toIndexedSeq: _*)
-    commitResult(p2, result)
+    commitResult(p, result)
   }
 
   /** Diff the touched-file pre-image against the merge's new files and
@@ -937,14 +915,12 @@ class MergeBuilder(
     * threw ambiguity.
     */
   private def stageChanges(
-      beforeTouched: DataFrame, newFiles: Seq[ManifestFile],
-      unified: StructType,
-      mapping: Map[String, String],
-      srcRows: Long, targetSchema: StructType): Option[java.nio.file.Path] = {
+      p: Prep, newFiles: Seq[ManifestFile]): Option[java.nio.file.Path] = {
     if (!changeFeed) return None
     // same reserved-name guard the append path applies: a source column
     // named _change_type would collide with the diff's own classifier
     // (duplicate-column write failure at best, mislabeled CDF at worst)
+    val unified = p.unified
     GraftTable.requireNoReservedCdfCols(unified.fieldNames.toSeq)
     val spark = table.spark
     // identity rides the diff on tracked tables: the before side carries
@@ -955,7 +931,7 @@ class MergeBuilder(
     // images — no spurious diffs; INSERT rows carry null (their id is
     // born at the commit this pre-staged diff precedes; read it from
     // changedSince/snapshotWithRowIds).
-    val tracking = beforeTouched.columns.contains(GraftTable.RowIdCol)
+    val tracking = p.target.columns.contains(GraftTable.RowIdCol)
     val readSchema =
       if (!tracking) unified
       else StructType(unified.fields :+ StructField(GraftTable.RowIdCol, LongType))
@@ -967,7 +943,7 @@ class MergeBuilder(
       if (newFiles.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], readSchema)
-      else table.readMasked(newFiles, readSchema, mapping)
+      else table.readMasked(newFiles, readSchema, p.writeMapping)
     // Key-restrict the diff to the SOURCE batch's pks (guide §2.3 —
     // shuffle fewer bytes; §3.2 — reduce the big side before joining):
     // when every output row's pk provably comes from the source batch
@@ -980,28 +956,28 @@ class MergeBuilder(
     // requires: no NOT MATCHED BY SOURCE clause (rows outside the batch
     // could change) and no explicit-assignment clause (UPDATE SET /
     // INSERT VALUES may rewrite or derive the pk itself — a key-change
-    // lands post-images OUTSIDE the batch's key set). Star clauses and
-    // the legacy updateAll/insertAll/delete path keep the join key. The
-    // same broadcast-size guard as the fast path bounds the key
+    // lands post-images OUTSIDE the batch's key set). Star and DELETE
+    // clauses keep the join key, so the test is the clause shape alone.
+    // The same broadcast-size guard as the fast path bounds the key
     // relation; oversized batches keep the full diff.
-    val pkStable = clauseState.notMatchedBySource.isEmpty &&
-      clauseState.matched.forall(_.action match {
+    val pkStable = p.mc.notMatchedBySource.isEmpty &&
+      p.mc.matched.forall(_.action match {
         case MergeClauses.UpdateAll | MergeClauses.Delete => true
         case _ => false
       }) &&
-      clauseState.notMatched.forall(_.action match {
+      p.mc.notMatched.forall(_.action match {
         case MergeClauses.InsertAll => true
         case _ => false
       })
-    val keyRestrict = pkStable && srcRows > 0 &&
+    val keyRestrict = pkStable && p.srcRows > 0 &&
       MergeBuilder.broadcastable(
-        srcRows, MergeBuilder.keyWidthBytes(targetSchema, pkCols))
+        p.srcRows, MergeBuilder.keyWidthBytes(p.targetSchema, pkCols))
     def restricted(df: DataFrame): DataFrame =
       if (!keyRestrict) df
       else df.join(
         broadcast(source.select(pkCols.map(col).toIndexedSeq: _*).distinct()),
         pkCols, "left_semi")
-    val bIn = restricted(beforeTouched)
+    val bIn = restricted(p.target)
     val aIn = restricted(after)
     if (!tracking)
       Some(table.stageChangeFeed(table.diffFrames(bIn, aIn, pkCols)))

@@ -35,12 +35,14 @@ import graft.operators.{MergeClauses, RowLevel}
   *   WHEN NOT MATCHED [AND c] THEN INSERT * | (cols) VALUES (exprs)
   *   WHEN NOT MATCHED BY SOURCE [AND c] THEN UPDATE SET ... | DELETE
   *
-  * The canonical `UPDATE SET *` + `INSERT *` shape (ref :200-209) keeps
-  * MergeBuilder's legacy flags and with them the broadcast-anti fast
-  * path; every other shape maps onto [[graft.operators.MergeClauses]]
-  * with standard first-matching-clause semantics. Conditions and values
-  * may reference both sides (`t.c` = target pre-image, `s.c` = source);
-  * ambiguous unqualified refs error loudly at execute.
+  * Every shape maps onto [[graft.operators.MergeClauses]] with standard
+  * first-matching-clause semantics, the same list the builder's flag API
+  * lowers to. MergeBuilder picks its execution from the clause shape: a
+  * small `UPDATE SET *` + `INSERT *` batch (ref :200-209) takes the
+  * broadcast-anti upsert, everything else one full-outer join.
+  * Conditions and values may reference both sides (`t.c` = target
+  * pre-image, `s.c` = source); ambiguous unqualified refs error loudly
+  * at execute.
   */
 class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
   import GraftDml._
@@ -100,47 +102,36 @@ class GraftDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
         val (root, tq) = graftTarget(spark, tgt).get
         val (pkCols, residual) = pkAndResidual(onCond)
         val sq = sourceQuals(src)
-        // The canonical shape (`UPDATE SET *` + `INSERT *`, no conditions,
-        // no other clauses) keeps the legacy flags — and with them the
-        // broadcast-anti fast path for small batches. Everything else
-        // (column assignments, clause conditions, DELETE, BY SOURCE) maps
-        // onto the ordered clause list with standard SQL semantics: the
-        // conditions/values travel UNRESOLVED and resolve at execute time
-        // against the merge's own join, so `t.c` reads the target
-        // PRE-image and `s.c` the source row.
-        val canonical = residual.isEmpty && nmbs.isEmpty &&
-          matched.forall { case UpdateStarAction(None) => true; case _ => false } &&
-          notMatched.forall { case InsertStarAction(None) => true; case _ => false }
-        if (canonical)
-          GraftMergeCommand(root, pkCols, matched.nonEmpty, notMatched.nonEmpty,
-            DmlTrees(source = Some(src)), schemaEvolution)
-        else {
-          def clause(a: MergeAction, where: String): MergeClauses.Clause = {
-            def sets(assignments: Seq[Assignment]) = assignments.map {
-              case Assignment(k, v) => keyName(k, tq) -> v
-            }
-            a match {
-              case UpdateStarAction(c) =>
-                MergeClauses.Clause(c, MergeClauses.UpdateAll)
-              case UpdateAction(c, assigns, _) =>
-                MergeClauses.Clause(c, MergeClauses.UpdateSet(sets(assigns)))
-              case DeleteAction(c) => MergeClauses.Clause(c, MergeClauses.Delete)
-              case InsertStarAction(c) =>
-                MergeClauses.Clause(c, MergeClauses.InsertAll)
-              case InsertAction(c, assigns) =>
-                MergeClauses.Clause(c, MergeClauses.InsertValues(sets(assigns)))
-              case other => throw unsupported(s"$where action $other",
-                "UPDATE / DELETE / INSERT")
-            }
+        // Every shape maps onto the ordered clause list with standard SQL
+        // semantics: conditions/values travel UNRESOLVED and resolve at
+        // execute time against the merge's own join, so `t.c` reads the
+        // target PRE-image and `s.c` the source row. MergeBuilder picks
+        // its broadcast fast path from the clause shape alone.
+        def clause(a: MergeAction, where: String): MergeClauses.Clause = {
+          def sets(assignments: Seq[Assignment]) = assignments.map {
+            case Assignment(k, v) => keyName(k, tq) -> v
           }
-          val mc = MergeClauses(
-            matched = matched.map(clause(_, "WHEN MATCHED")),
-            notMatched = notMatched.map(clause(_, "WHEN NOT MATCHED")),
-            notMatchedBySource = nmbs.map(clause(_, "WHEN NOT MATCHED BY SOURCE")),
-            targetQuals = tq, sourceQuals = sq, onResidual = residual)
-          GraftMergeCommand(root, pkCols, updateAll = false, insertAll = false,
-            DmlTrees(source = Some(src), merge = Some(mc)), schemaEvolution)
+          a match {
+            case UpdateStarAction(c) =>
+              MergeClauses.Clause(c, MergeClauses.UpdateAll)
+            case UpdateAction(c, assigns, _) =>
+              MergeClauses.Clause(c, MergeClauses.UpdateSet(sets(assigns)))
+            case DeleteAction(c) => MergeClauses.Clause(c, MergeClauses.Delete)
+            case InsertStarAction(c) =>
+              MergeClauses.Clause(c, MergeClauses.InsertAll)
+            case InsertAction(c, assigns) =>
+              MergeClauses.Clause(c, MergeClauses.InsertValues(sets(assigns)))
+            case other => throw unsupported(s"$where action $other",
+              "UPDATE / DELETE / INSERT")
+          }
         }
+        val mc = MergeClauses(
+          matched = matched.map(clause(_, "WHEN MATCHED")),
+          notMatched = notMatched.map(clause(_, "WHEN NOT MATCHED")),
+          notMatchedBySource = nmbs.map(clause(_, "WHEN NOT MATCHED BY SOURCE")),
+          targetQuals = tq, sourceQuals = sq, onResidual = residual)
+        GraftMergeCommand(root, pkCols,
+          DmlTrees(source = Some(src), merge = Some(mc)), schemaEvolution)
     }
 }
 
@@ -531,8 +522,7 @@ case class GraftInsertCommand(
   * subquery) analyzes at run time through [[PlanBridge.ofRows]].
   */
 case class GraftMergeCommand(
-    root: String, pkCols: Seq[String], updateAll: Boolean,
-    insertAll: Boolean, trees: GraftDml.DmlTrees,
+    root: String, pkCols: Seq[String], trees: GraftDml.DmlTrees,
     schemaEvolution: Boolean = false)
   extends LeafRunnableCommand {
   override val output: Seq[Attribute] = GraftDml.versionOutput
@@ -541,16 +531,9 @@ case class GraftMergeCommand(
     // SQL statements follow the SQL contract: evolution only with the
     // explicit WITH SCHEMA EVOLUTION clause (the programmatic
     // MergeBuilder default stays permissive)
-    var b = GraftTable(spark, root).merge(source, pkCols)
+    Seq(Row(GraftTable(spark, root).merge(source, pkCols)
       .withSchemaEvolution(schemaEvolution)
-    trees.merge match {
-      case Some(mc) => b = b.withClauses(mc)
-      case None =>
-        if (updateAll) b = b.whenMatchedUpdateAll()
-        if (insertAll) b = b.whenNotMatchedInsertAll()
-        trees.cond.foreach(c => b = b.whenMatchedDelete(
-          org.apache.spark.sql.graftbridge.ColumnBridge.toColumn(c)))
-    }
-    Seq(Row(b.execute()))
+      .withClauses(trees.merge.get)
+      .execute()))
   }
 }

@@ -47,6 +47,21 @@ class MergeClausesPropertySpec extends AnyFunSuite {
     def apply(t: T, sv: Int) = Some(Some((sv, "u")))
   }
 
+  // Flag-API atoms: the builder lowers them onto the same clause list.
+  // The delete condition reads `v`, a name BOTH sides have: the flag API
+  // binds it to the source row, and a NULL verdict means "keep".
+  private def flagDel(sv: Int): Boolean = sv % 5 != 0 && sv % 3 == 0
+  private case object MFlagDelete extends MAtom {
+    def wire(b: MergeBuilder) = b.whenMatchedDelete(
+      "CASE WHEN v % 5 = 0 THEN NULL ELSE v % 3 = 0 END")
+    def apply(t: T, sv: Int) = if (flagDel(sv)) Some(None) else None
+  }
+  private case object MFlagUpdateAll extends MAtom {
+    def wire(b: MergeBuilder) = b.whenMatchedUpdateAll()
+    // the source has no `tag`: UPDATE SET * keeps its pre-image
+    def apply(t: T, sv: Int) = Some(Some((sv, t._2)))
+  }
+
   private sealed trait IAtom {
     def wire(b: MergeBuilder): MergeBuilder
     def apply(id: Long, sv: Int): Option[T]
@@ -62,6 +77,14 @@ class MergeClausesPropertySpec extends AnyFunSuite {
     def wire(b: MergeBuilder) = b.whenNotMatchedInsert(
       Seq("id" -> "s.id", "v" -> "s.v * 2", "tag" -> "'ins'"))
     def apply(id: Long, sv: Int) = Some((sv * 2, "ins"))
+  }
+
+  /** whenNotMatchedInsertAll next to whenMatchedDelete: delete-marked
+    * source rows never insert; `tag` (target-only) lands NULL.
+    */
+  private case object IFlagInsertAllCdc extends IAtom {
+    def wire(b: MergeBuilder) = b.whenNotMatchedInsertAll()
+    def apply(id: Long, sv: Int) = if (flagDel(sv)) None else Some((sv, null))
   }
 
   private sealed trait NAtom {
@@ -87,7 +110,11 @@ class MergeClausesPropertySpec extends AnyFunSuite {
     Combo("bysource", Seq(MUpdAlways), Seq.empty, Seq(NDelSmall, NStale)),
     Combo("insert-only", Seq.empty, Seq(IOdd, IAll), Seq.empty),
     Combo("delete-first", Seq(MDeleteMod3, MUpdAlways), Seq(IAll),
-      Seq(NStale)))
+      Seq(NStale)),
+    Combo("flag-cdc", Seq(MFlagDelete, MFlagUpdateAll), Seq(IFlagInsertAllCdc),
+      Seq.empty),
+    Combo("flag-update-delete", Seq(MFlagDelete, MFlagUpdateAll), Seq.empty,
+      Seq.empty))
 
   private def applyModel(model: Model, batch: Seq[(Long, Int)], c: Combo): Model = {
     val src = batch.toMap
