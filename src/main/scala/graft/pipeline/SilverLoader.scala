@@ -52,9 +52,9 @@ class SilverLoader(
     correctedDeletes: Boolean = false,
     registerInCatalog: Boolean = false,
     publishChangeFeed: Boolean = false,
-    // enable row tracking on each silver table at first load: the
-    // silver then serves IDENTITY downstream (the gold mirror's exact
-    // hop, changedSince/syncMirror) — the chained-medallion default
+    // keep each silver table row-tracked, enabled right after its first
+    // load: the silver then serves IDENTITY downstream (the gold mirror's
+    // exact hop, changedSince/syncMirror) — the chained-medallion default
     rowTracking: Boolean = false) {
 
   def sourceDf(e: Entity): DataFrame =
@@ -127,58 +127,25 @@ class SilverLoader(
         val cached = batch.cache() // ref :181
         val n = cached.count()
         // ---- 4b. write: overwrite on first load, merge after (ref :190-209) ----
+        // the exactly-once upsert (GraftTable.upsertLanded/upsertOnce);
+        // the load's retry unit is its watermark range, under the
+        // entity's stable writer identity
         val target = silverTable(e)
-        val firstLoad = !target.exists
-        // publishChangeFeed chains the pipeline: every load's row-level
-        // changes — INCLUDING the first load's initial snapshot — land
-        // in the silver table's `_changes/` store, so downstream NRT
-        // consumers (gold aggregates, exports) tail `readChangeStream`
-        // instead of re-scanning silver per cycle.
-        //
-        // The load's txn identity is its WATERMARK RANGE: a crash
-        // between the write and closeWatermark reruns this load with
-        // the same oldWatermark, and re-merging would re-stamp every
-        // row's SyncDateTime — idempotent for the table but a full
-        // duplicate batch in the change feed. The marker makes the
-        // retry detect the landed write, skip it, and backfill a feed
-        // publication the crash may also have lost.
-        // appId = the entity's stable writer identity: keys the table's
-        // txn index, so this per-load replay check costs one small JSON
-        // read + a ≤1-manifest crash-window scan — NOT a scan of the
-        // table's whole commit history (which grows forever at NRT
-        // cadence), and markers stay detectable past the vacuum horizon.
         val txnAppId = s"silver:${e.entityId}"
         val txnMarker = s"$txnAppId:$oldWatermark->$nw"
-        val landedAt =
-          target.latestVersion.flatMap(_ => target.txnVersion(txnAppId, txnMarker))
-        val version =
-          if (landedAt.isDefined) {
-            if (publishChangeFeed)
-              target.repairChangeFeed(e.pkCols, sinceVersion = landedAt.get)
-            // a crash between the first write and the enablement leaves
-            // the marker landed but the table untracked — finish here
-            if (rowTracking && !target.latestManifest.exists(_.rowTracking))
-              target.enableRowTracking()
-            landedAt.get
-          } else if (firstLoad) {
-            val v = target.overwriteStats(cached, e.pkCols, txn = Some(txnMarker),
-              txnApp = Some(txnAppId))
-            if (publishChangeFeed) target.publishInitialSnapshot()
-            // after the snapshot publication: the maintenance commit
-            // backfills ids onto the v1 files, so a graft-source
-            // consumer started past it reads a fully-id'd snapshot
-            if (rowTracking) target.enableRowTracking()
-            v
-          } else {
-            val m = target.merge(cached, e.pkCols)
-              .whenMatchedUpdateAll().whenNotMatchedInsertAll()
-            val m2 = if (correctedDeletes) m.whenMatchedDelete("SyncOperation = 'D'") else m
-            (if (publishChangeFeed) m2.withChangeFeed() else m2)
-              .withTxnMarker(txnAppId, txnMarker).execute()
-          }
+        val version = target.upsertLanded(txnAppId, txnMarker, e.pkCols, publishChangeFeed)
+          .getOrElse(target.upsertOnce(cached, e.pkCols, txnAppId, txnMarker,
+            deleteWhen = Option.when(correctedDeletes)("SyncOperation = 'D'"),
+            changeFeed = publishChangeFeed))
+        // after the write and its snapshot publication: the maintenance
+        // commit backfills ids onto the v1 files, so a graft-source
+        // consumer started past it reads a fully-id'd snapshot; a replay
+        // finishes an enablement a crash interrupted
+        if (rowTracking && !target.latestManifest.exists(_.rowTracking))
+          target.enableRowTracking()
         cached.unpersist()
         // ---- 4c. DDL (ref :187-196) ----
-        // keyed on CATALOG state, not firstLoad: a crash between the
+        // keyed on CATALOG state, not a first-load flag: a crash between the
         // first commit and the DDL (or a fresh metastore over existing
         // silver dirs) must register on the retry. Registration is
         // once-per-table: the relation derives BOTH its file listing and

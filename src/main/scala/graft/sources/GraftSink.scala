@@ -13,18 +13,18 @@ import org.apache.spark.sql.streaming.OutputMode
   * marker `<appId>:<batchId>` (appId from `option("txnAppId", ...)`,
   * defaulting to the query's checkpointLocation — a QUERY identity,
   * never a table identity, because batchIds restart per checkpoint), so
-  * a replayed batch — the
-  * at-least-once window after a crash between sink commit and
-  * checkpoint advance — is detected via [[GraftTable.lastTxn]] and
-  * skipped. Same contract as the foreachBatch loaders
-  * ([[graft.streaming.StreamingSilverLoader]]).
+  * a replayed batch — a crash between sink commit and checkpoint
+  * advance — is skipped. The `pk` mode is the exactly-once upsert
+  * ([[GraftTable.upsertLanded]]/[[GraftTable.upsertOnce]]) shared with
+  * the foreachBatch loaders; append and Complete modes detect the replay
+  * with [[GraftTable.lastTxn]].
   *
   * Modes, chosen by options (all stats-collecting so downstream merges
   * prune; `option("stats", "c1,c2")`):
   *  - default (Append output mode): versioned appends; with
   *    `option("changeFeed", "true")` each batch also publishes into the
   *    stored change feed (zero-copy hard links), making the table a
-  *    complete NRT tail for [[GraftTable.readChangeStream]] consumers
+  *    complete NRT tail for the native `format("graft")` CDF source
   *  - `option("pk", "k1,k2")`: MERGE upsert per batch (streaming
   *    upsert) — matched keys update, new keys insert; combine with
   *    `changeFeed` for a stored feed of the upserts
@@ -59,18 +59,23 @@ class GraftSink(
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val t = GraftTable(spark, root)
-    if (t.exists && t.lastTxn(appId).exists(_ >= batchId)) { // replay
-      if (appIdIsRootFallback) throw new IllegalStateException(
-        s"graft sink at $root found txn marker '$appId:${t.lastTxn(appId).get}' " +
-          s">= incoming batch $batchId under the TABLE-ROOT appId fallback. A " +
-          "stream without a checkpoint cannot replay, so these markers belong " +
-          "to a different stream writing this table — discarding the batch " +
-          "would silently lose it. Set option(\"txnAppId\", ...) (or a " +
-          "checkpointLocation) to give this stream its own replay identity.")
-      // A crash between the FIRST batch's commit and its change-feed
-      // snapshot publication lands here on replay with the feed still
-      // missing v1 — publish it now (publishChangeFeed is first-wins, so
-      // racing a concurrent publisher is benign).
+    val marker = s"$appId:$batchId"
+    val upsert = pk.nonEmpty && outputMode != OutputMode.Complete()
+    lazy val landedTxn = t.exists && t.lastTxn(appId).exists(_ >= batchId)
+    if (appIdIsRootFallback && landedTxn) throw new IllegalStateException(
+      s"graft sink at $root found txn marker '$appId:${t.lastTxn(appId).get}' " +
+        s">= incoming batch $batchId under the TABLE-ROOT appId fallback. A " +
+        "stream without a checkpoint cannot replay, so these markers belong " +
+        "to a different stream writing this table — discarding the batch " +
+        "would silently lose it. Set option(\"txnAppId\", ...) (or a " +
+        "checkpointLocation) to give this stream its own replay identity.")
+    if (upsert) {
+      if (t.upsertLanded(appId, marker, pk, changeFeed).isDefined) return
+    } else if (landedTxn) { // replay
+      // An append has no key to re-diff a lost publication on, so only
+      // the FIRST batch's is healed: a crash between its commit and its
+      // snapshot publication leaves the feed missing v1 — publish it now
+      // (first-wins, so racing a concurrent publisher is benign).
       if (changeFeed && t.latestVersion.contains(1L) &&
           !t.changeFeedVersions.contains(1L))
         t.publishInitialSnapshot()
@@ -91,22 +96,19 @@ class GraftSink(
       it.map(r => deser(r.copy()))
     }
     val batch = spark.createDataFrame(rows, schema)
-    val marker = Some(s"$appId:$batchId")
+    val txn = Some(marker)
     val app = Some(appId)
-    if (outputMode == OutputMode.Complete())
-      t.overwriteStats(batch, stats, txn = marker, txnApp = app)
+    if (upsert)
+      t.upsertOnce(batch, pk, appId, marker, changeFeed = changeFeed, statsCols = stats)
+    else if (outputMode == OutputMode.Complete())
+      t.overwriteStats(batch, stats, txn = txn, txnApp = app)
     else if (!t.exists) {
-      t.overwriteStats(batch, stats, txn = marker, txnApp = app)
+      t.overwriteStats(batch, stats, txn = txn, txnApp = app)
       if (changeFeed) t.publishInitialSnapshot()
-    } else if (pk.nonEmpty) {
-      val m = t.merge(batch, pk)
-        .whenMatchedUpdateAll().whenNotMatchedInsertAll()
-        .withTxn(appId, batchId)
-      (if (changeFeed) m.withChangeFeed() else m).execute()
     } else if (changeFeed)
-      t.appendWithChangeFeed(batch, stats, txn = marker, txnApp = app)
+      t.appendWithChangeFeed(batch, stats, txn = txn, txnApp = app)
     else
-      t.appendStats(batch, stats, txn = marker, txnApp = app)
+      t.appendStats(batch, stats, txn = txn, txnApp = app)
   }
 
   override def toString: String = s"GraftSink[$root]"

@@ -1941,6 +1941,70 @@ class GraftTable(
     */
   def txnVersion(marker: String): Option[Long] = scanTxn(0L)(_ == marker)
 
+  // ---- exactly-once upsert ----------------------------------------------
+
+  /** Step 1 of the exactly-once upsert, shared by every replayable upsert
+    * writer (`SilverLoader`, the foreachBatch loaders, the `pk` sink):
+    * has the retry unit committed under `marker` already?
+    *
+    * Each unit (a watermark range, a micro-batch id) commits under its
+    * marker ([[upsertOnce]]). A crash after that commit but before the
+    * caller records progress (closeWatermark, the stream checkpoint)
+    * reruns the unit. Re-merging it is idempotent for the table, but the
+    * rows carry a fresh audit stamp, so every row diffs as changed and
+    * the change feed would publish the batch twice. A hit returns the
+    * landed version and the caller skips its write. The commit and its
+    * feed publication are two renames, so the crash may also have lost
+    * the publication: with `changeFeed` on, a hit backfills the feed from
+    * the landed version on ([[repairChangeFeed]] is first-wins, so an
+    * intact feed is a no-op).
+    *
+    * Driver-only metadata: call it before anything evaluates the batch
+    * (`isEmpty`, sketching), so a replay never pays for a batch it skips.
+    * Keyed by `appId` it reads the txn index — one small JSON plus a
+    * crash-window scan of 0–1 manifests, never the whole history — and
+    * markers stay detectable past the vacuum horizon. An absent table is
+    * a miss.
+    */
+  def upsertLanded(
+      appId: String, marker: String, pkCols: Seq[String],
+      changeFeed: Boolean): Option[Long] = {
+    val landed = txnVersion(appId, marker)
+    if (changeFeed) landed.foreach(v => repairChangeFeed(pkCols, sinceVersion = v))
+    landed
+  }
+
+  /** Step 2 of the exactly-once upsert (the protocol is on
+    * [[upsertLanded]], which must have missed): upsert `batch` on `pkCols`
+    * under `marker`. Rows where `deleteWhen` (SQL over the batch) holds
+    * delete their matched key; a NULL verdict keeps the row.
+    *
+    * An absent table takes the merge-into-empty rule: the rows
+    * `deleteWhen` does not mark become the first version, with stats on
+    * `statsCols` (empty = `pkCols`), and with `changeFeed` on that
+    * version is published as the initial snapshot, so a hop bootstrapped
+    * from the change feed (the native `format("graft")` CDF source) sees
+    * the first, usually largest, batch. Otherwise one star-clause merge,
+    * whose change feed is the next hop's input. Both go through the
+    * overridable [[merge]] and [[overwriteStats]]. Returns the committed
+    * version.
+    */
+  def upsertOnce(
+      batch: DataFrame, pkCols: Seq[String], appId: String, marker: String,
+      deleteWhen: Option[String] = None, changeFeed: Boolean = false,
+      statsCols: Seq[String] = Nil): Long =
+    if (!exists) {
+      val kept = deleteWhen.fold(batch)(c => batch.filter(!coalesce(expr(c), lit(false))))
+      val v = overwriteStats(kept, if (statsCols.nonEmpty) statsCols else pkCols,
+        txn = Some(marker), txnApp = Some(appId))
+      if (changeFeed) publishInitialSnapshot()
+      v
+    } else {
+      val m = merge(batch, pkCols).whenMatchedUpdateAll().whenNotMatchedInsertAll()
+      val m2 = deleteWhen.fold(m)(m.whenMatchedDelete)
+      (if (changeFeed) m2.withChangeFeed() else m2).withTxnMarker(appId, marker).execute()
+    }
+
   /** Replace the table contents (ref :193 — first-load overwrite path). */
   def overwrite(df: DataFrame, statsCol: Option[String] = None): Long =
     overwriteStats(df, statsCol.toSeq)

@@ -27,8 +27,8 @@ import graft.sources.GraftTable
   *    verification touches O(matched files), not O(corpus)); a
   *    pathological batch whose candidates exceed the cap degrades to a
   *    left-semi join — no manifest pruning, but bounded driver memory;
-  *  - admits merge with a txn marker (replays skip idempotently, same
-  *    contract as [[StreamingSilverLoader]]) and publish their change
+  *  - admits are the exactly-once upsert ([[GraftTable.upsertOnce]];
+  *    replays skip, as in [[StreamingSilverLoader]]) and publish their change
   *    feed, which the store sync then applies — O(admitted);
   *  - quarantine writes MERGE on (batch_id, id) rather than append, so
   *    an at-least-once replay of a batch that crashed between the
@@ -56,7 +56,6 @@ class StreamingDedupIngest(
     quarantineVacuumMinAgeMs: Long = 3600000L) {
 
   private def appId: String = txnAppId.getOrElse(checkpointDir)
-  private var lastCommitted: Option[Long] = None
 
   def start(maxFilesPerTrigger: Int = 100): StreamingQuery =
     spark.readStream
@@ -73,16 +72,12 @@ class StreamingDedupIngest(
 
   /** One micro-batch: verdict, admit, quarantine, sync. */
   private[graft] def gateBatch(batchRaw: DataFrame, batchId: Long): Unit = {
-    // at-least-once replay guard (see StreamingSilverLoader.mergeBatch):
-    // the admit committed with marker "<appId>:<batchId>" — a replay
-    // converges the side effects (feed publication, store sync) and
-    // skips. Checked BEFORE the emptiness probe: the skip is driver-only
-    // metadata, isEmpty evaluates the batch plan.
-    if (lastCommitted.isEmpty && corpus.exists)
-      lastCommitted = corpus.lastTxn(appId)
-    if (lastCommitted.exists(_ >= batchId)) {
-      corpus.txnVersion(appId, s"$appId:$batchId")
-        .foreach(v => corpus.repairChangeFeed(Seq(idCol), sinceVersion = v))
+    // at-least-once replay guard: the admit is the exactly-once upsert
+    // (GraftTable.upsertLanded/upsertOnce), so a replay heals the feed,
+    // converges the store sync and skips — before isEmpty or any sketch
+    // evaluates the batch
+    val marker = s"$appId:$batchId"
+    if (corpus.upsertLanded(appId, marker, Seq(idCol), changeFeed = true).isDefined) {
       store.syncFrom(corpus)
       return
     }
@@ -136,19 +131,9 @@ class StreamingDedupIngest(
     val rejected = batch.join(verdict, Seq(idCol))
       .withColumn("batch_id", lit(batchId))
     quarantineRejected(rejected)
-    if (!corpus.exists) {
-      corpus.overwriteStats(admitted, Seq(idCol),
-        txn = Some(s"$appId:$batchId"), txnApp = Some(appId))
-      corpus.publishInitialSnapshot()
-    } else {
-      // admitted rows are NEW by construction (a matched key would be a
-      // dup); the merge still upserts defensively on the pk
-      corpus.merge(admitted, Seq(idCol))
-        .whenMatchedUpdateAll().whenNotMatchedInsertAll()
-        .withChangeFeed().withTxn(appId, batchId)
-        .execute()
-    }
-    lastCommitted = Some(batchId)
+    // admitted rows are NEW by construction (a matched key would be a
+    // dup); the merge still upserts defensively on the pk
+    corpus.upsertOnce(admitted, Seq(idCol), appId, marker, changeFeed = true)
     store.syncFrom(corpus) // O(admitted): applies the feed rows just published
     verdict.unpersist(false)
     bSigs.unpersist(false)

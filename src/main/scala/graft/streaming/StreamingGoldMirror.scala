@@ -44,7 +44,6 @@ class StreamingGoldMirror(
   private val IdCol = GraftTable.RowIdOut
   private val GoldId = storedIdCol.getOrElse(IdCol)
   private def appId: String = txnAppId.getOrElse(checkpointDir)
-  private var lastCommitted: Option[Long] = None
 
   def start(): StreamingQuery =
     spark.readStream.format("graft")
@@ -81,9 +80,7 @@ class StreamingGoldMirror(
     // emptiness before the skip billed a full batch computation to
     // every checkpoint replay (guide §1: don't compute what you throw
     // away)
-    if (lastCommitted.isEmpty && gold.exists)
-      lastCommitted = gold.lastTxn(appId)
-    if (lastCommitted.exists(_ >= batchId)) return
+    if (gold.exists && gold.lastTxn(appId).exists(_ >= batchId)) return
     // the batch plan evaluates several times below (emptiness probe,
     // then the merge/overwrite whose own probes re-derive from it);
     // each evaluation repeats the source's id-fill joins — persist once
@@ -138,7 +135,6 @@ class StreamingGoldMirror(
           Some("s._change_type <> 'delete'"))
         .withTxn(appId, batchId).execute()
     }
-    lastCommitted = Some(batchId)
   }
 }
 

@@ -15,8 +15,8 @@ import graft.sources.GraftTable
   *
   *  - offsets/progress = the streaming checkpoint (replaces the
   *    Watermarks table's role for this path),
-  *  - effectively-once = checkpointed offsets + idempotent pk-merge
-  *    (a replayed batch upserts the same rows),
+  *  - effectively-once = checkpointed offsets + the exactly-once
+  *    upsert (a replayed batch finds its txn marker and skips),
   *  - deletes = op-aware merge, reference or corrected mode.
   *
   * Feed rows carry the entity's full payload + SYS_CHANGE_OPERATION
@@ -42,11 +42,6 @@ class StreamingSilverLoader(
 
   private def appId: String = txnAppId.getOrElse(checkpointDir)
 
-  // one history scan per loader lifetime, then tracked in memory — the
-  // guard runs on every micro-batch and a full newest-first manifest
-  // scan per batch would be O(history) I/O on the hot path
-  private var lastCommitted: Option[Long] = None
-
   def start(maxFilesPerTrigger: Int = 100): StreamingQuery =
     spark.readStream
       .schema(feedSchema)
@@ -64,29 +59,11 @@ class StreamingSilverLoader(
     * several changes for one key), audit-stamp, merge.
     */
   private[graft] def mergeBatch(batch: DataFrame, batchId: Long): Unit = {
-    // foreachBatch is at-least-once: a crash after the merge commit but
-    // before the checkpoint records the offset replays this batch. The
-    // table merge alone would be idempotent, but the replayed rows carry
-    // a NEW SyncDateTime stamp (every row diffs as changed) and the
-    // change feed would publish the batch a second time — so the commit
-    // records a txn marker and replays skip here. The skip check runs
-    // BEFORE the emptiness probe: it is driver-only metadata, while
-    // isEmpty evaluates the batch plan — a replay must not pay for a
-    // batch it is about to skip.
-    if (lastCommitted.isEmpty && target.exists)
-      lastCommitted = target.lastTxn(appId)
-    if (lastCommitted.exists(_ >= batchId)) {
-      // the skipped batch's merge committed, but a crash may have landed
-      // between that commit and its change-feed publication — a replay
-      // that just returns would preserve the feed gap forever. Mirror the
-      // batch SilverLoader's landedAt branch: backfill from the version
-      // the skipped batch committed (repair is first-wins, so racing an
-      // intact feed is a no-op).
-      if (publishChangeFeed)
-        target.txnVersion(appId, s"$appId:$batchId")
-          .foreach(v => target.repairChangeFeed(pkCols, sinceVersion = v))
-      return
-    }
+    // foreachBatch is at-least-once: the exactly-once upsert
+    // (GraftTable.upsertLanded/upsertOnce) makes a replay of a committed
+    // batch a skip — checked before isEmpty evaluates the batch plan
+    val marker = s"$appId:$batchId"
+    if (target.upsertLanded(appId, marker, pkCols, publishChangeFeed).isDefined) return
     if (batch.isEmpty) return
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(pkCols.map(col): _*)
@@ -96,23 +73,8 @@ class StreamingSilverLoader(
       .filter(col("__rn") === 1).drop("__rn", "SYS_CHANGE_VERSION")
       .withColumn("SyncDateTime", current_timestamp())
       .withColumnRenamed("SYS_CHANGE_OPERATION", "SyncOperation")
-    if (!target.exists) {
-      target.overwriteStats(
-        if (correctedDeletes) latest.filter(col("SyncOperation") =!= "D") else latest,
-        Seq(pkCols.head), txn = Some(s"$appId:$batchId"), txnApp = Some(appId))
-      // first load: publish the initial snapshot so a downstream hop
-      // bootstrapped from readChangeStream sees the (usually largest)
-      // first batch, not just subsequent deltas
-      if (publishChangeFeed) target.publishInitialSnapshot()
-    } else {
-      val m = target.merge(latest, pkCols)
-        .whenMatchedUpdateAll().whenNotMatchedInsertAll()
-      val m2 = if (correctedDeletes) m.whenMatchedDelete("SyncOperation = 'D'") else m
-      // chain the stream: this loader's own changes become the next
-      // hop's readChangeStream input (bronze→silver→gold NRT)
-      (if (publishChangeFeed) m2.withChangeFeed() else m2)
-        .withTxn(appId, batchId).execute()
-    }
-    lastCommitted = Some(batchId)
+    target.upsertOnce(latest, pkCols, appId, marker,
+      deleteWhen = Option.when(correctedDeletes)("SyncOperation = 'D'"),
+      changeFeed = publishChangeFeed)
   }
 }

@@ -162,4 +162,33 @@ class GraftSinkSpec extends AnyFunSuite {
     assert(t.changeFeedVersions == Seq(1L))
     assert(t.changeFeed(1).count() == 2)
   }
+
+  test("pk replay heals the lost feed publication of a merge version") {
+    val tmp = Files.createTempDirectory("graft-sinkpkcdf").toString
+    val root = s"$tmp/table"
+    val t = GraftTable(spark, root)
+    def sink = new GraftSink(spark, root,
+      Map("txnAppId" -> "appP", "pk" -> "id", "changeFeed" -> "true"),
+      OutputMode.Append())
+    val batch1 = Seq((2L, "B"), (3L, "c")).toDF("id", "v")
+    sink.addBatch(0, Seq((1L, "a"), (2L, "b")).toDF("id", "v")) // v1 bootstrap
+    sink.addBatch(1, batch1) // v2 merge
+    assert(t.changeFeedVersions == Seq(1L, 2L))
+    def feedV2 = t.changeFeed(2).collect().toSet
+    val published = feedV2
+    // simulate: batch 1's merge committed, then the process died BEFORE
+    // its change-feed publication
+    val lost = java.nio.file.Paths.get(root, "_changes", f"v${2L}%020d")
+    val walk = Files.walk(lost)
+    try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      .forEach(p => Files.delete(p))
+    finally walk.close()
+    assert(t.changeFeedVersions == Seq(1L))
+    // the restarted stream replays batch 1: no new commit, and the
+    // missing v2 publication is recomputed from the landed version
+    sink.addBatch(1, batch1)
+    assert(t.latestVersion.contains(2L), "replay must not commit a new version")
+    assert(t.changeFeedVersions == Seq(1L, 2L))
+    assert(feedV2 == published)
+  }
 }
