@@ -18,15 +18,13 @@ import graft.sources.GraftTable
   * keyed to the SOURCE version it caught up to, so replayed or racing
   * syncs land exactly once.
   *
-  * Window versions WITHOUT stored change data are triaged by manifest:
-  * maintenance rewrites (compact/zorder) and empty appends are provably
-  * row-free and skipped; overwrites, restores, and row-COUNT-changing
-  * feed-off appends and merges force one full re-derive of the
-  * snapshot — loud in cost, never stale in content. The single
-  * undecidable case is an EQUAL-COUNT feed-off MERGE (an update-only
-  * merge is indistinguishable by manifest from a zero-diff merge, which
-  * legitimately publishes nothing): it is trusted as zero-diff, so
-  * source merges MUST run `.withChangeFeed()`.
+  * Window versions WITHOUT stored change data are triaged by the
+  * table's one commit-delta rule ([[GraftTable.rowDelta]]): a version
+  * that provably changed no row (maintenance, column DDL, row-tracking
+  * enablement, a no-op restore, an unchanged file set) is skipped; any
+  * other one — overwrite, restore, feed-off append or merge — forces
+  * one full re-derive of the snapshot: loud in cost, never stale in
+  * content.
   *
   * Derived schema: (idCol, [[deriveCols]]…, op string) — `op` is the
   * last sync operation audit column ('U'), mirroring the silver
@@ -111,18 +109,8 @@ abstract class ChangeFeedFollower(
 
     val stored = source.changeFeedVersions.toSet
     val unsafeGap = ((last.get + 1) to target).filterNot(stored).exists { v =>
-      def rowsChanged: Boolean =
-        try source.manifest(v - 1).allRows != source.manifest(v).allRows
-        catch { case _: java.nio.file.NoSuchFileException => true }
-      try source.manifest(v).operation match {
-        case Some("compact") | Some("zorder") => false
-        case Some("append") => rowsChanged // rows>0 would have published
-        // an insert/delete-carrying feed-off merge moves allRows exactly
-        // like the append case; only the equal-count (update-only vs
-        // zero-diff) merge remains undecidable and is trusted as zero-diff
-        case Some("merge") => rowsChanged
-        case _ => true // overwrite / restore / unknown
-      } catch { case _: java.nio.file.NoSuchFileException => true }
+      try source.rowDelta(Some(source.manifest(v - 1)), source.manifest(v)).isDefined
+      catch { case _: java.nio.file.NoSuchFileException => true } // vacuumed
     }
     if (unsafeGap) return fullResync()
     val changes =

@@ -850,15 +850,12 @@ case class GraftRestore(
     }
     // metrics vs the PRE-restore state (identity = path + DV pointer,
     // same as conflict detection: a moved DV means different live rows)
-    val prior = t.latestManifest.map(m =>
-      t.filesOf(m).map(f => f.path -> f.dv).toMap).getOrElse(Map.empty)
+    val prior = t.latestManifest
     val committed = t.restore(v)
-    val after = t.filesOf(t.manifest(committed))
-    val restoredFiles =
-      after.count(f => !prior.get(f.path).contains(f.dv)).toLong
-    val removedFiles =
-      prior.size.toLong - after.count(f => prior.get(f.path).contains(f.dv))
-    Seq(Row(committed, restoredFiles, removedFiles, after.size.toLong,
+    val m = t.manifest(committed)
+    val (removed, restored) = t.filesDelta(prior, m)
+    val after = t.filesOf(m)
+    Seq(Row(committed, restored.size.toLong, removed.size.toLong, after.size.toLong,
       after.map(_.bytes.getOrElse(0L)).sum))
   }
 }

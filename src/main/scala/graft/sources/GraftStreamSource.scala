@@ -21,12 +21,12 @@ import org.apache.spark.sql.types.StructType
   *  - **Tail**: each later micro-batch serves exactly the data files
   *    ADDED by the versions in `(lastOffset, latest]`, walked
   *    version-by-version so a file added then compacted away inside one
-  *    batch window is still delivered once. Maintenance commits
-  *    (compact / zorder / purge / column DDL) rewrite or re-reference
-  *    rows without changing them — their files are never re-served
-  *    (Delta's dataChange=false). A RESTORE whose file set equals the
-  *    previous version's is likewise a no-op to the stream; a restore
-  *    that changes the file set breaks append-only delivery and fails
+  *    batch window is still delivered once. Commits the table's
+  *    commit-delta rule ([[GraftTable.rowDelta]]) calls row-free —
+  *    compact / zorder / purge / column DDL, or an unchanged file set —
+  *    are never re-served (Delta's dataChange=false), so a RESTORE to
+  *    the previous version's file set is a no-op; a restore that
+  *    changes the file set breaks append-only delivery and fails
   *    loudly even if the restored ROWS happen to be identical (e.g. a
   *    restore across a compact — the stream compares file identity,
   *    not bytes, exactly like Delta's file-based change detection).
@@ -97,13 +97,6 @@ class GraftStreamSource(
     */
   private val withRowIds =
     opt("withRowIds").exists(_.equalsIgnoreCase("true"))
-
-  /** Commits that rewrite/re-reference rows without changing table
-    * contents — never served to the stream (Delta dataChange=false).
-    */
-  private val MaintenanceOps = Set(
-    "compact", "zorder", "purge", "rename column", "drop column",
-    "add column")
 
   private def latestRequired: Manifest = {
     val m = table.latestManifest.getOrElse(
@@ -361,27 +354,16 @@ class GraftStreamSource(
     else unitCache.getOrElseUpdate(v, {
       val m = manifestOrHorizon(v)
       if (v == pinnedV0) (table.filesOf(m).sortBy(_.path), m.mapping)
-      else {
-        val op = m.operation.getOrElse("write")
-        if (MaintenanceOps.contains(op)) (Nil, m.mapping)
-        else {
-          val prevIds: Map[String, Option[String]] =
-            if (v <= 1) Map.empty
-            else table.filesOf(manifestOrHorizon(v - 1)).map(f => f.path -> f.dv).toMap
-          val files = table.filesOf(m)
-          val curIds = files.map(f => f.path -> f.dv).toMap
-          // identity is (path, dv): a DV landing on an existing file
-          // deletes rows from it — a data change, exactly like a rewrite
-          val removedAny = prevIds.exists { case (p, dv) =>
-            !curIds.get(p).contains(dv)
-          }
-          val addedAny = files.exists(f => !prevIds.get(f.path).contains(f.dv))
+      else table.rowDelta(if (v <= 1) None else Some(manifestOrHorizon(v - 1)), m) match {
+        case None => (Nil, m.mapping)
+        case Some((removed, added)) =>
+          val op = m.operation.getOrElse("write")
           // ignoreDeletes: a delete-ONLY commit (removals, no additions —
           // TRUNCATE, retention DELETEs that drop whole files) is
           // skipped; anything that also adds files is a rewrite and
           // still fails without ignoreChanges (Delta's contract)
-          val deleteOnly = removedAny && !addedAny
-          if (removedAny && !(deleteOnly && ignoreDeletes) &&
+          val deleteOnly = removed.nonEmpty && added.isEmpty
+          if (removed.nonEmpty && !(deleteOnly && ignoreDeletes) &&
             !ignoreChanges && !readChangeFeed) {
             val what =
               if (op == "restore")
@@ -401,7 +383,6 @@ class GraftStreamSource(
                 "or consume row-accurate changes via " +
                 "GraftTable.readChangeStream()")
           }
-          val added = files.filterNot(f => prevIds.get(f.path).contains(f.dv))
           // stream schema is fixed at start: any mid-stream schema change
           // (DROP/RENAME, ADD, type widening) on a version the stream will
           // serve fails loudly — restart replays under the new schema.
@@ -412,7 +393,6 @@ class GraftStreamSource(
           // serves correctly instead of failing.
           if (added.nonEmpty) requireSchemaStable(v, m)
           (added.sortBy(_.path), m.mapping)
-        }
       }
     })
 
@@ -578,33 +558,27 @@ class GraftStreamSource(
     val stored = table.changeFeedVersions.toSet
     val dataVersions = ((fromExclusive + 1) to endV).flatMap { v =>
       val m = manifestOrHorizon(v)
-      val op = m.operation.getOrElse("write")
-      if (MaintenanceOps.contains(op)) None else Some((v, m, op))
+      if (GraftTable.isRowFree(m)) None else Some((v, m))
     }
     if (dataVersions.isEmpty) return None
     // schema drift past stream start fails the batch BEFORE any rows are
     // served column-subset — the restart replays it under the new schema
-    dataVersions.foreach { case (v, m, _) => requireSchemaStable(v, m) }
+    dataVersions.foreach { case (v, m) => requireSchemaStable(v, m) }
     val (haveStored, derive) = dataVersions.partition(t => stored.contains(t._1))
-    val derived = derive.flatMap { case (v, m, op) =>
-      val prevIds: Map[String, Option[String]] =
-        if (v <= 1) Map.empty
-        else table.filesOf(manifestOrHorizon(v - 1)).map(f => f.path -> f.dv).toMap
-      val files = table.filesOf(m)
-      val curIds = files.map(f => f.path -> f.dv).toMap
-      if (prevIds.exists { case (p, dv) => !curIds.get(p).contains(dv) })
-        throw new IllegalStateException(
-          s"graft CDF stream at $root: version $v ($op) rewrote or removed " +
-            "rows but has no stored change feed (never published, or " +
-            "already vacuumed) — the stream cannot derive its deltas. " +
-            "Write with .withChangeFeed() / appendWithChangeFeed / sink " +
-            "option changeFeed=true, or restart past it with " +
-            "option(\"startingVersion\", ...)")
-      val added = files.filterNot(f => prevIds.get(f.path).contains(f.dv))
-      if (added.isEmpty) None
-      else Some(readUnit(added, m.mapping)
-        .withColumn("_change_type", lit("insert"))
-        .withColumn("_commit_version", lit(v)))
+    val derived = derive.flatMap { case (v, m) =>
+      table.rowDelta(if (v <= 1) None else Some(manifestOrHorizon(v - 1)), m).map {
+        case (removed, _) if removed.nonEmpty =>
+          throw new IllegalStateException(
+            s"graft CDF stream at $root: version $v (${m.operation.getOrElse("write")}) " +
+              "rewrote or removed rows but has no stored change feed (never " +
+              "published, or already vacuumed) — the stream cannot derive its " +
+              "deltas. Write with .withChangeFeed() / appendWithChangeFeed / " +
+              "sink option changeFeed=true, or restart past it with " +
+              "option(\"startingVersion\", ...)")
+        case (_, added) => readUnit(added, m.mapping)
+          .withColumn("_change_type", lit("insert"))
+          .withColumn("_commit_version", lit(v))
+      }
     }
     val storedDf =
       if (haveStored.isEmpty) Nil

@@ -409,6 +409,35 @@ class GraftTable(
   def filesOf(m: Manifest): Seq[ManifestFile] =
     m.files ++ m.chunks.getOrElse(Nil).flatMap(readChunk)
 
+  /** The files `after` removed from `before` and the files it added
+    * (`before = None`: the empty table ahead of version 1). Identity is
+    * (path, dv pointer): a DV landing on a kept file moves its live rows,
+    * so the file counts as removed AND re-added — for the stream, the
+    * change-feed follower, conflict rebase and RESTORE's metrics alike.
+    */
+  private[graft] def filesDelta(
+      before: Option[Manifest], after: Manifest): (Seq[ManifestFile], Seq[ManifestFile]) = {
+    val was = before.map(filesOf).getOrElse(Nil)
+    val now = filesOf(after)
+    val wasIds = was.map(f => f.path -> f.dv).toMap
+    val nowIds = now.map(f => f.path -> f.dv).toMap
+    (was.filterNot(f => nowIds.get(f.path).contains(f.dv)),
+      now.filterNot(f => wasIds.get(f.path).contains(f.dv)))
+  }
+
+  /** THE commit-delta rule (Delta's per-action `dataChange` flag): `None`
+    * when commit `m` changed no row — a [[GraftTable.RowFreeOps]] op, or
+    * a commit whose [[filesDelta]] is empty (enableRowTracking, a widen,
+    * a no-op restore) — else `Some((removed, added))`. `prev` (the
+    * manifest of `m.version - 1`, `None` for version 1) is read only when
+    * the op does not already decide, so a caller's retention-horizon
+    * handling sees exactly the reads it did before.
+    */
+  private[graft] def rowDelta(
+      prev: => Option[Manifest], m: Manifest): Option[(Seq[ManifestFile], Seq[ManifestFile])] =
+    if (GraftTable.isRowFree(m)) None
+    else Some(filesDelta(prev, m)).filter { case (r, a) => r.nonEmpty || a.nonEmpty }
+
   /** Aggregate a chunk's member stats into its ref: totals always; a
     * column's range only when EVERY member has one (a partial aggregate
     * could prune a live file). Type-aware min/max via StatsPruning so
@@ -520,6 +549,12 @@ class GraftTable(
     */
   private[graft] def relPathExpr(fp: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
     val rootAbs = Paths.get(root).toAbsolutePath.toString
+    // the prefix literals below are mutually exclusive only for a root
+    // below `/`: with marker "//", "file:" + marker is a prefix of
+    // "file:/" + marker and the fast path would diverge from the fallback
+    require(rootAbs != "/",
+      s"table root $root resolves to the filesystem root; row-level reads " +
+        "need a table directory below it")
     // Fast path first (this expression runs per ROW under every row-id /
     // DV-masked read — a regex pipeline here was ~30% of the whole
     // id-read's cost at 150k rows): plain renderings (no percent-escapes,
@@ -537,10 +572,11 @@ class GraftTable(
     // result), so each case is one literal-prefix startswith (a memcmp,
     // no search and no substring allocation on the check) + one strip at
     // a compile-time offset. The four literals are mutually exclusive as
-    // prefixes, so case order is immaterial. A first-occurrence strip
-    // (the previous locate-based path) would mis-relativize a
-    // hypothetical off-root path containing "<root>/" mid-string; such
-    // paths now fall through to the anchored-regex chain untouched.
+    // prefixes (given the root guard above), so case order is immaterial.
+    // A first-occurrence strip (the previous locate-based path) would
+    // mis-relativize a hypothetical off-root path containing "<root>/"
+    // mid-string; such paths now fall through to the anchored-regex chain
+    // untouched.
     val fallback =
       regexp_replace(
         regexp_replace(decoded, "^file:/+", "/"),
@@ -3068,10 +3104,12 @@ class GraftTable(
       throw new IllegalStateException(s"no committed version at $root")))
 
   /** [[snapshotWithRowIds]] as of `version` (time travel). */
-  def snapshotWithRowIdsAt(version: Long): DataFrame = {
-    val m = manifest(version)
+  def snapshotWithRowIdsAt(version: Long): DataFrame =
+    snapshotWithRowIdsOf(manifest(version))
+
+  private def snapshotWithRowIdsOf(m: Manifest): DataFrame = {
     require(m.rowTracking,
-      s"row tracking is not enabled as of version $version at $root — " +
+      s"row tracking is not enabled as of version ${m.version} at $root — " +
         "call enableRowTracking() first")
     val schema = StructType.fromDDL(m.schema)
     val all = filesOf(m)
@@ -3506,9 +3544,10 @@ class GraftTable(
     * this after crashes (or on orchestrator start): each gap is
     * recomputed relationally from the adjacent snapshots
     * ([[changesBetween]] — same classifier the merge-time diff uses) and
-    * published under its version. Maintenance rewrites (compact/zorder)
-    * are skipped (no row changes); gaps whose pre-image was vacuumed are
-    * skipped and returned in `_2` (unrepairable).
+    * published under its version. Versions that changed no row
+    * ([[rowDelta]]: maintenance, column DDL, an unchanged file set) are
+    * skipped; gaps whose pre-image was vacuumed are skipped and returned
+    * in `_2` (unrepairable).
     *
     * ORDERING caveat for LIVE streams: a backfilled version arrives at
     * running [[readChangeStream]] consumers AFTER later versions they
@@ -3538,56 +3577,45 @@ class GraftTable(
     // diff then pairs by identity (exact under key-changing updates,
     // matching what a live tracked writer would have stored) and the
     // backfilled feed rows carry `_row_id` like live-written ones
-    def fetch(v: Long): Option[(Manifest, DataFrame)] =
-      try {
-        val m = manifest(v)
-        val snap =
-          if (m.rowTracking)
-            snapshotWithRowIdsAt(v).drop(GraftTable.RowCommitOut)
-          else snapshotOf(m)
-        Some((m, snap))
-      }
-      catch { case _: java.nio.file.NoSuchFileException => None }
-    // the previous iteration's (version, manifest, snapshot): inside a
-    // contiguous gap run, gap v's after-image IS gap v+1's pre-image
-    var held: Option[(Long, Manifest, DataFrame)] = None
+    def snap(m: Manifest): DataFrame =
+      if (m.rowTracking) snapshotWithRowIdsOf(m).drop(GraftTable.RowCommitOut)
+      else snapshotOf(m)
+    // the previous gap's manifest: inside a contiguous gap run, gap v's
+    // after-image IS gap v+1's pre-image
+    var held: Option[Manifest] = None
     for (v <- math.max(sinceVersion, 1L) to latest if !have.contains(v)) {
-      fetch(v) match {
-        case None => unrepairable += v; held = None // vacuumed version
-        case Some((man, after)) =>
-          if (!man.operation.exists(Set("compact", "zorder", "purge"))) { // maint = no row changes
-            val prev =
-              if (v == 1L) None
-              else held.collect { case (hv, m, s) if hv == v - 1 => (m, s) }
-                .orElse(fetch(v - 1))
-            // a row-less append intentionally published nothing (see
-            // appendImpl) — not a gap, and not worth a snapshot diff
-            val emptyAppend = man.operation.contains("append") && prev.exists { p =>
-              val prevPaths = filesOf(p._1).map(_.path).toSet
-              filesOf(man).filterNot(f => prevPaths.contains(f.path)).forall(_.rows == 0)
-            }
-            if (v > 1L && prev.isEmpty) unrepairable += v // pre-image vacuumed
-            else if (!emptyAppend) {
-              val changes =
-                if (v == 1L) after.withColumn("_change_type", lit("insert"))
-                else if (man.rowTracking && prev.get._1.rowTracking)
-                  diffFrames(prev.get._2, after, Seq(GraftTable.RowIdOut))
-                else
-                  // enablement inside the gap run: the untracked side
-                  // would null-fill `_row_id` and make EVERY row look
-                  // changed — fall back to the key diff without ids
-                  diffFrames(prev.get._2.drop(GraftTable.RowIdOut),
-                    after.drop(GraftTable.RowIdOut), pkCols)
-              val staged = stageChangeFeed(changes, namedAs = Some(man))
-              // rows>0 guard (parity with the write paths): an empty
-              // recomputed diff publishes nothing — absence already
-              // means "no stored changes"
-              if (spark.read.parquet(staged.toString).isEmpty) dropDir(staged)
-              else { publishChangeFeed(v, staged); repaired += v }
-            }
+      val fetched = try Some(manifest(v))
+        catch { case _: java.nio.file.NoSuchFileException => None }
+      fetched match {
+        case None => unrepairable += v // vacuumed version
+        case Some(man) =>
+          // read only when the op does not already decide (rowDelta)
+          lazy val prev = held.filter(_.version == v - 1).getOrElse(manifest(v - 1))
+          val delta =
+            try rowDelta(if (v == 1L) None else Some(prev), man)
+            catch { case _: java.nio.file.NoSuchFileException =>
+              unrepairable += v; None } // pre-image vacuumed
+          delta.foreach { _ =>
+            val after = snap(man)
+            val changes =
+              if (v == 1L) after.withColumn("_change_type", lit("insert"))
+              else if (man.rowTracking && prev.rowTracking)
+                diffFrames(snap(prev), after, Seq(GraftTable.RowIdOut))
+              else
+                // enablement inside the gap run: the untracked side
+                // would null-fill `_row_id` and make EVERY row look
+                // changed — fall back to the key diff without ids
+                diffFrames(snap(prev).drop(GraftTable.RowIdOut),
+                  after.drop(GraftTable.RowIdOut), pkCols)
+            val staged = stageChangeFeed(changes, namedAs = Some(man))
+            // rows>0 guard (parity with the write paths): an empty
+            // recomputed diff publishes nothing — absence already
+            // means "no stored changes"
+            if (spark.read.parquet(staged.toString).isEmpty) dropDir(staged)
+            else { publishChangeFeed(v, staged); repaired += v }
           }
-          held = Some((v, man, after))
       }
+      held = fetched
     }
     (repaired.toSeq, unrepairable.toSeq)
   }
@@ -4432,19 +4460,12 @@ class GraftTable(
           attempts += 1
           if (attempts >= 50) throw e // pathological contention
           val latest = manifest(latestVersion.getOrElse(throw e))
-          // identity is (path, dv pointer): a concurrent merge-on-read
-          // DELETE leaves the path in place but moves its DV — for
-          // conflict purposes that file was removed AND re-added (two DV
-          // deletes of one file must not silently clobber each other's
-          // masks, exactly as two rewrites of one file must not)
-          val baseFiles = filesOf(base)
-          val baseDv = baseFiles.map(f => f.path -> f.dv).toMap
-          val latestFiles = filesOf(latest)
-          val latestDv = latestFiles.map(f => f.path -> f.dv).toMap
-          val removedMeanwhile = baseFiles
-            .filter(f => !latestDv.get(f.path).contains(f.dv)).map(_.path).toSet
-          val addedMeanwhile = latestFiles
-            .filterNot(f => baseDv.get(f.path).contains(f.dv))
+          // a concurrent merge-on-read DELETE leaves the path in place but
+          // moves its DV — for conflict purposes that file was removed AND
+          // re-added (two DV deletes of one file must not silently clobber
+          // each other's masks, exactly as two rewrites of one file must not)
+          val (removed, addedMeanwhile) = filesDelta(Some(base), latest)
+          val removedMeanwhile = removed.map(_.path).toSet
           if (removedMeanwhile.exists(replaced.contains))
             throw new java.util.ConcurrentModificationException(
               s"merge conflict at $root: a concurrent commit rewrote file(s) " +
@@ -5015,6 +5036,16 @@ class GraftTable(
 }
 
 object GraftTable {
+  /** Commit ops that rewrite or re-reference rows without changing any
+    * (maintenance and column DDL) — never a row change to a downstream
+    * hop, whatever their files did.
+    */
+  private val RowFreeOps = Set(
+    "compact", "zorder", "purge", "rename column", "drop column", "add column")
+
+  private[graft] def isRowFree(m: Manifest): Boolean =
+    RowFreeOps.contains(m.operation.getOrElse("write"))
+
   /** Type promotions the parquet reader serves natively from the OLD
     * physical encoding (verified against Spark 4.1's vectorized reader)
     * — the exact set [[GraftTable.widenColumn]] accepts. Everything here

@@ -195,6 +195,21 @@ class ChangeFeedSpec extends AnyFunSuite {
     assert(t.repairChangeFeed(Seq("id"))._1.isEmpty, "repair stays idempotent")
   }
 
+  test("repair skips a column-DDL version: a rename changes no row") {
+    val t = GraftTable(spark, tmp())
+    t.overwrite(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v"), Some("id")) // v1
+    t.publishInitialSnapshot()
+    t.merge(Seq((2L, "b2")).toDF("id", "v"), Seq("id"))
+      .whenMatchedUpdateAll().whenNotMatchedInsertAll()
+      .withChangeFeed().execute() // v2
+    assert(t.renameColumn("v", "w") == 3L) // v3: metadata only
+    // a snapshot diff across the rename would see every row's `w` appear
+    // (NULL pre-image) and publish an update pair per row
+    val (repaired, unrep) = t.repairChangeFeed(Seq("id"))
+    assert(!repaired.contains(3L) && unrep.isEmpty)
+    assert(t.changeFeedVersions == Seq(1L, 2L))
+  }
+
   test("feed-publishing appends reject reserved columns and skip empty batches") {
     val t = GraftTable(spark, tmp())
     t.overwrite(Seq((1L, "a")).toDF("id", "v"), Some("id"))

@@ -596,4 +596,13 @@ class GraftTableSpec extends AnyFunSuite {
     got.zip(cases.map(_._2)).foreach { case (g, w) =>
       assert(g == w, s"got $g want $w") }
   }
+
+  test("relPathExpr refuses the filesystem root as a table root") {
+    import org.apache.spark.sql.functions.col
+    // with root "/" the marker is "//", and "file:" + marker is a prefix
+    // of "file:/" + marker: the fast path's literals stop being exclusive
+    val e = intercept[IllegalArgumentException](
+      GraftTable(spark, "/").relPathExpr(col("fp")))
+    assert(e.getMessage.contains("filesystem root"))
+  }
 }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Percentiles
@@ -11,7 +13,9 @@ import graft.operators.Percentiles
   * quantile_cont semantics.
   */
 class PercentilesSpec extends AnyFunSuite {
-  private lazy val spark = TestSpark.spark
+  // a session of its own: the probe-plan listener below then sees only
+  // this suite's queries
+  private lazy val spark = TestSpark.spark.newSession()
   import spark.implicits._
 
   private val qs = Seq(0.5 -> "p50", 0.95 -> "p95", 0.99 -> "p99")
@@ -90,16 +94,36 @@ class PercentilesSpec extends AnyFunSuite {
     // row per group) and the fallback answer must stay exact
     val rnd = new scala.util.Random(7)
     val df = (1 to 20000).map(i => (s"g${i % 1000}", rnd.nextDouble())).toDF("g", "v")
-    val got = canon(Percentiles.exact(df, "g", "v", qs,
-      maxGroups = 8, smallBytes = 0L, sortBytes = 0L))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe)
+    }
+    spark.listenerManager.register(listener)
+    val got = try {
+      val g = canon(Percentiles.exact(df, "g", "v", qs,
+        maxGroups = 8, smallBytes = 0L, sortBytes = 0L))
+      // listener events arrive in order on one bus: once this marker
+      // query is seen, every query exact() ran has been seen too
+      val marker = spark.range(1).toDF("percentiles_marker")
+      marker.collect()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(marker.queryExecution) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+      assert(seen.contains(marker.queryExecution), "listener never saw the marker")
+      g
+    } finally spark.listenerManager.unregister(listener)
     val want = canon(Percentiles.exactBySort(df, "g", "v", qs))
     assert(got.keySet == want.keySet)
     got.foreach { case (g, vals) =>
       vals.zip(want(g)).foreach { case (a, b) => assert(a == b, s"group $g") } }
-    // and the probe plan itself carries the limit — the collect can
-    // never materialize the full group cardinality on the driver
-    val probe = df.groupBy("g").agg(count(lit(1))).limit(9)
-    assert(probe.queryExecution.optimizedPlan.toString.contains("GlobalLimit")
-      || probe.queryExecution.optimizedPlan.getClass.getSimpleName.contains("Limit"))
+    // and the production probe's own plan carries the limit — the
+    // collect can never materialize the full group cardinality on the
+    // driver
+    import scala.jdk.CollectionConverters._
+    val probes = seen.asScala.toSeq.map(_.optimizedPlan.toString)
+      .filter(_.contains("percentile_approx"))
+    assert(probes.nonEmpty, "the sketch-tier probe never ran")
+    assert(probes.forall(_.contains("GlobalLimit 9")), probes.mkString("\n"))
   }
 }

@@ -119,6 +119,29 @@ class SketchStoreSpec extends AnyFunSuite {
       .contains("overwrite")) // the full-resync path, not a feed apply
   }
 
+  test("an equal-count feed-off update merge forces a full resync") {
+    val (silverRoot, sketchRoot) = newRoots()
+    val silver = GraftTable(spark, silverRoot)
+    val store = new SketchStore(spark, sketchRoot, "doc_id", "text")
+
+    silver.overwriteStats(docs.filter(col("doc_id") < 100), Seq("doc_id"))
+    silver.publishInitialSnapshot()
+    store.syncFrom(silver)
+
+    // v2: a merge WITHOUT .withChangeFeed() that rewrites 20 existing
+    // keys' text — the row count stays 100, only the file set moves
+    silver.merge(
+      docs.filter(col("doc_id") < 20)
+        .withColumn("text", concat_ws(" ", reverse(split(col("text"), " ")))),
+      Seq("doc_id"))
+      .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute()
+    assert(silver.fastCount == 100L)
+    assert(store.syncFrom(silver) == 2L)
+    assert(storedSigs(store) == freshSigs(silver.snapshot))
+    assert(store.table.latestManifest.flatMap(_.operation)
+      .contains("overwrite")) // the full-resync path, not a feed apply
+  }
+
   test("provably row-free window versions advance the marker without resketching") {
     val (silverRoot, sketchRoot) = newRoots()
     val silver = GraftTable(spark, silverRoot)
@@ -133,6 +156,15 @@ class SketchStoreSpec extends AnyFunSuite {
     assert(storedSigs(store) == freshSigs(silver.snapshot))
     // marker advanced via the incremental (merge) path, not a re-sketch
     assert(store.syncedVersion.contains(2L))
+    assert(store.table.latestManifest.flatMap(_.operation).contains("merge"))
+
+    silver.enableRowTracking() // v3: re-lists the same files with id ranges
+    silver.addColumn("lang", "STRING") // v4: column DDL, no file touched
+    val storeVersion = store.table.latestVersion
+    assert(store.syncFrom(silver) == 4L)
+    assert(storedSigs(store) == freshSigs(silver.snapshot))
+    assert(store.syncedVersion.contains(4L))
+    assert(store.table.latestVersion.map(_ - 1) == storeVersion)
     assert(store.table.latestManifest.flatMap(_.operation).contains("merge"))
   }
 

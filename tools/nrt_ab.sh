@@ -9,11 +9,14 @@
 # so each builds its own `.bench_build/`. For every workload in
 # BENCHMARK.json and seeds 101..(100+pairs), both sides run
 #   python3 nrtbench/run.py --workload <w> --seed <s> --seconds <S> --trace 0
-# alternating which side runs first. tools/nrt_ab_summarize.py then
-# prints, per end-to-end metric, both medians, the parent's IQR, the
-# change's win count and whether the change is worse than the parent
-# by more than the metric's BENCHMARK.json bound. Reads nrtbench/ and
-# BENCHMARK.json of each clone and changes neither.
+# alternating which side runs first, then the same pairs with --trace 1
+# on seeds 101..103 (each clone keeps their full result files under
+# .bench_build/results/). tools/nrt_ab_summarize.py then prints, per
+# end-to-end metric, both medians, the parent's IQR, the change's win
+# count and whether the change is worse than the parent by more than the
+# metric's BENCHMARK.json bound; and both sides' medians of every traced
+# per-layer count (Spark jobs, tasks, files, store calls). Reads
+# nrtbench/ and BENCHMARK.json of each clone and changes neither.
 set -euo pipefail
 
 PARENT_REF="${1:?usage: nrt_ab.sh <parent-ref> [change-ref] [pairs] [seconds]}"
@@ -40,28 +43,35 @@ clone change "$CHANGE_REF"
 
 WORKLOADS="$(python3 -c 'import json,sys; print(" ".join(w["name"] for w in json.load(open(sys.argv[1]))["workloads"]))' "$WORK/change/BENCHMARK.json")"
 
-run() { # $1 = side, $2 = workload, $3 = seed; the last stdout line is the result JSON
-  local side="$1" w="$2" s="$3" out="$WORK/out/$1-$2-s$3"
-  echo "[nrt-ab] $w seed $s: $side" >&2
+run() { # $1 = side, $2 = workload, $3 = seed, $4 = trace; the last stdout line is the result JSON
+  local side="$1" w="$2" s="$3" t="$4" out="$WORK/out/$1-$2-s$3"
+  [ "$t" -eq 0 ] || out="$out-t$t"
+  echo "[nrt-ab] $w seed $s trace $t: $side" >&2
   local rc=0
   (cd "$WORK/$side" &&
-    python3 nrtbench/run.py --workload "$w" --seed "$s" --seconds "$RUN_SECONDS" --trace 0) \
+    python3 nrtbench/run.py --workload "$w" --seed "$s" --seconds "$RUN_SECONDS" --trace "$t") \
     >"$out.log" 2>"$out.err" || rc=$?
   echo "$rc" >"$out.rc"
-  [ "$rc" -eq 0 ] || echo "[nrt-ab] $side $w seed $s exited $rc — see $out.err" >&2
+  [ "$rc" -eq 0 ] || echo "[nrt-ab] $side $w seed $s trace $t exited $rc — see $out.err" >&2
+}
+
+pairs() { # $1 = trace, $2 = number of seeds from 101
+  local w p s
+  for w in $WORKLOADS; do
+    for p in $(seq 1 "$2"); do
+      s=$((100 + p))
+      # alternate which side runs first, so a drift in ambient load does
+      # not always favour the same side
+      if [ $((i % 2)) -eq 0 ]; then run parent "$w" "$s" "$1"; run change "$w" "$s" "$1"
+      else run change "$w" "$s" "$1"; run parent "$w" "$s" "$1"; fi
+      i=$((i + 1))
+    done
+  done
 }
 
 i=0
-for w in $WORKLOADS; do
-  for p in $(seq 1 "$PAIRS"); do
-    s=$((100 + p))
-    # alternate which side runs first, so a drift in ambient load does
-    # not always favour the same side
-    if [ $((i % 2)) -eq 0 ]; then run parent "$w" "$s"; run change "$w" "$s"
-    else run change "$w" "$s"; run parent "$w" "$s"; fi
-    i=$((i + 1))
-  done
-done
+pairs 0 "$PAIRS"
+pairs 1 3
 
 python3 "$REPO/tools/nrt_ab_summarize.py" "$WORK/out" "$WORK/change/BENCHMARK.json" \
   "$(git -C "$REPO" rev-parse --short "$PARENT_REF")" \
