@@ -190,10 +190,19 @@ object Bench {
       } catch { case e: Throwable =>
         s"""{"error":${jstr(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(200)}")}}"""
       }
+    // provenance: the file is overwritten by whichever run went last
+    val gitSha =
+      try scala.sys.process.Process(Seq("git", "rev-parse", "--short", "HEAD"))
+        .!!(scala.sys.process.ProcessLogger(_ => ())).trim match {
+          case "" => "unknown"
+          case sha => sha
+        }
+      catch { case _: Throwable => "unknown" }
     val detail =
       s"""{"bench_detail":1,"passes":$passes,"warmup":${if (warmup) 1 else 0},""" +
         s""""total":${fmt(total, 3)},""" +
-        s""""sf":${jstr(sfDir)},"status":$status,"medians":$medianJson,""" +
+        s""""sf":${jstr(sfDir)},"cpus":${jstr(cpus)},"git":${jstr(gitSha)},""" +
+        s""""status":$status,"medians":$medianJson,""" +
         s""""fixture_split":$measuredJson,""" +
         s""""streaming_latency":$streamJson,"runs":$rawRuns}"""
     println(detail)

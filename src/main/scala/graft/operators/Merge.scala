@@ -502,15 +502,16 @@ class MergeBuilder(
     // lands, so the check runs on the evolved schema above.
     requireNoWidening(targetSchema, unified)
     val statsCol = pkCols.head
-    // partitioned tables: merge output keeps the partition clustering and
-    // partition-column stats, so the layout survives incremental loads.
+    // partitioned tables: merge output keeps the partition clustering,
+    // and the rewritten files keep the table's stats contract (partition
+    // columns included), so the layout survives incremental loads.
     // (Partition columns prune the merge itself only when part of the pk
     // — a pk that can move across partitions makes pruning on them
     // unsound, so it is never done implicitly.)
     val partCols = m.partitionCols.getOrElse(Nil)
     // pk first: the head is the "primary" legacy stats column and should
     // stay a footer-friendly type (partition cols are often dates)
-    val statsCols = (pkCols ++ partCols).distinct
+    val statsCols = (pkCols ++ table.statsContract(m)).distinct
     def arranged(result: DataFrame): DataFrame =
       if (partCols.nonEmpty) table.clusterBy(result, partCols) else result
     // physical naming for this merge's output files (identity unless the

@@ -186,8 +186,7 @@ object RowLevel {
     }
     // pv-aware write-back: rewritten files on a converted table carry
     // their partition tuple (O(touched), no bridge)
-    val newFiles = table.writeRewriteFiles(m, after, statsColsOf(table, m),
-      m.mapping)
+    val newFiles = table.writeRewriteFiles(m, after, table.statsContract(m), m.mapping)
 
     // ---- 4. stage change rows pre-commit, publish post-commit ----
     // tracked tables' change rows carry `_row_id` into the stored feed
@@ -298,7 +297,7 @@ object RowLevel {
       if (op == "delete") Nil
       else {
         val post = matched.select(applied(matched, None) ++ rowIdCols: _*)
-        table.writeRewriteFiles(m, post, statsColsOf(table, m), m.mapping)
+        table.writeRewriteFiles(m, post, table.statsContract(m), m.mapping)
       }
 
     // same identity-into-the-feed contract as the COW path
@@ -417,8 +416,7 @@ object RowLevel {
     // get ids from the file's allocated range at read time)
     val combined = keep
       .map(_.unionByName(gated, allowMissingColumns = true)).getOrElse(gated)
-    val newFiles = table.writeRewriteFiles(m, combined, statsColsOf(table, m),
-      m.mapping)
+    val newFiles = table.writeRewriteFiles(m, combined, table.statsContract(m), m.mapping)
     if (touched.isEmpty && newFiles.forall(_.rows == 0L))
       return m.version // nothing replaced, nothing added — no empty commit
 
@@ -434,28 +432,6 @@ object RowLevel {
       op = "replaceWhere")
     staged.foreach(table.publishChangeFeed(v, _))
     v
-  }
-
-  /** Stats columns to carry through the rewrite: the table's existing
-    * per-file stats layout (legacy primary first, then the ranged
-    * columns, then partition columns) — a DELETE must not silently strip
-    * the min/max that keep the NEXT merge's pruning alive.
-    */
-  private def statsColsOf(table: GraftTable, m: Manifest): Seq[String] = {
-    val fs = table.filesOf(m)
-    // harvested keys are PHYSICAL; the write funnel expects logical
-    // (and re-translates) — keys of since-dropped columns fall out here
-    val p2l = m.logicalByPhysical
-    val current = org.apache.spark.sql.types.StructType.fromDDL(m.schema).fieldNames.toSet
-    val primary = fs.flatMap(_.statsCol).headOption.toSeq
-    val ranged = fs.headOption.toSeq
-      .flatMap(f => StatsPruning.fileRanges(f).keys.toSeq.sorted)
-    val derived = (primary ++ ranged).map(c => p2l.getOrElse(c, c))
-      .filter(current.contains)
-    // zero-file table (schema-first create): honor the declared contract
-    (if (derived.nonEmpty) derived
-     else table.declaredStatsCols.filter(current.contains))
-      .++(m.partitionCols.getOrElse(Nil)).distinct
   }
 
   /** The condition rendered as conjunctive predicates over RESOLVED

@@ -435,7 +435,8 @@ class GraftDataSource
     * Overwrite/first-write → versioned overwrite, Append → versioned
     * append — so a DataFrameWriter user gets the same manifest commits,
     * stats and time travel as the Scala API. `option("stats",
-    * "c1,c2")` selects the per-file min/max stats columns.
+    * "c1,c2")` selects the per-file min/max stats columns; without it
+    * the write takes the table's [[GraftTable.statsContract]].
     */
   override def createRelation(
       sqlContext: SQLContext, mode: SaveMode,
@@ -446,15 +447,12 @@ class GraftDataSource
     val stats = parameters.get("stats")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Nil)
-    def write(): Unit =
-      if (stats.nonEmpty) t.overwriteStats(data, stats)
-      else t.overwrite(data)
+    def write(): Unit = t.overwriteStats(data, stats)
     mode match {
       case SaveMode.Overwrite => write()
       case SaveMode.Append =>
         if (!t.exists) write()
-        else if (stats.nonEmpty) t.appendStats(data, stats)
-        else t.append(data)
+        else t.appendStats(data, stats)
       case SaveMode.ErrorIfExists =>
         if (t.exists) throw new IllegalStateException(
           s"graft table at $root already exists (SaveMode.ErrorIfExists)")

@@ -427,18 +427,7 @@ case class GraftInsertCommand(
           lit(static.find(_._1.equalsIgnoreCase(f.name)).get._2).cast(f.dataType)
         else valued(f.name)).as(f.name)
       }.toIndexedSeq: _*)
-    // keep the table's pruning contract: reuse the current stats columns
-    // (primary first — the ordering merge pruning relies on)
-    val p2l = m.logicalByPhysical
-    val stats: Seq[String] = t.filesOf(m).headOption.map { f =>
-      val primary = f.statsCol.map(c => p2l.getOrElse(c, c)).toSeq
-      val rest = StatsPruning.fileRanges(f).keys.map(c => p2l.getOrElse(c, c))
-        .filterNot(primary.contains).toSeq.sorted
-      (primary ++ rest).filter(schema.fieldNames.contains)
-    }.filter(_.nonEmpty)
-      // zero-file table (schema-first create): the DECLARED contract
-      // governs, so the very first INSERT already lands pruning stats
-      .getOrElse(t.declaredStatsCols.filter(schema.fieldNames.contains))
+    val stats = t.statsContract(m)
     val parts = m.partitionCols.getOrElse(Nil)
     val v =
       if (overwrite && partSpec.nonEmpty) {

@@ -20,7 +20,8 @@ import org.apache.spark.sql.streaming.OutputMode
   * with [[GraftTable.lastTxn]].
   *
   * Modes, chosen by options (all stats-collecting so downstream merges
-  * prune; `option("stats", "c1,c2")`):
+  * prune; `option("stats", "c1,c2")`, else the pk, else the table's
+  * [[GraftTable.statsContract]]):
   *  - default (Append output mode): versioned appends; with
   *    `option("changeFeed", "true")` each batch also publishes into the
   *    stored change feed (zero-copy hard links), making the table a

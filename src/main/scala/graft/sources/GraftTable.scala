@@ -870,14 +870,7 @@ class GraftTable(
         footerFields(Paths.get(root, f.path)).exists(retiredSet.contains)))
     if (dved.isEmpty) return m.version
     val schema = StructType.fromDDL(m.schema)
-    // harvested stats keys are PHYSICAL (as written); the frame below is
-    // logical — translate back, dropping keys of since-dropped columns
-    val statsCols = {
-      val multi = dved.flatMap(_.ranges.map(_.keys.toSeq).getOrElse(Nil)).distinct
-      val p2l = m.logicalByPhysical
-      (if (multi.nonEmpty) multi else dved.flatMap(_.statsCol).distinct)
-        .map(c => p2l.getOrElse(c, c)).filter(schema.fieldNames.contains)
-    }
+    val statsCols = statsContract(m)
     val live = dved.map(_.liveRows).sum
     val nFiles = math.max(1, math.ceil(live.toDouble / targetFileRows).toInt)
     val df = readForRewrite(m, dved, schema)
@@ -895,7 +888,7 @@ class GraftTable(
           if (partCols.nonEmpty) clusterBy(df, partCols)
           else if (statsCols.nonEmpty) df.repartitionByRange(nFiles, statsCols.map(col): _*)
           else df.repartition(nFiles)
-        writeDataFiles(arranged, (statsCols ++ partCols).distinct, m.mapping)
+        writeDataFiles(arranged, statsCols, m.mapping)
       }
     swap(dved.map(_.path).toSet, newFiles, schema, m.version,
       mayConflict = _ => false, op = "purge")
@@ -2046,7 +2039,8 @@ class GraftTable(
     overwriteStats(df, statsCol.toSeq)
 
   /** Overwrite collecting per-file stats for several columns (pass the
-    * full primary key so composite merges can prune on every column).
+    * full primary key so composite merges can prune on every column;
+    * none = the existing table's [[statsContract]]).
     *
     * A partition declaration SURVIVES a plain overwrite (the data is
     * replaced, the layout contract is not): the new contents are
@@ -2068,12 +2062,14 @@ class GraftTable(
     * work and a second identity pass would double-allocate).
     */
   private def overwriteStatsPrepared(
-      df: DataFrame, statsCols: Seq[String], txn: Option[String] = None,
+      df: DataFrame, statsColsIn: Seq[String], txn: Option[String] = None,
       txnApp: Option[String] = None): Long = {
     // ONE base resolution for declaration + expected version: reading
     // them separately would let a commit landing during the data write
     // erase a concurrent partition declaration without a conflict
     val base = latestManifest
+    val statsCols =
+      if (statsColsIn.nonEmpty) statsColsIn else inheritedStats(base, df.columns.toSeq)
     val pvColsAll = base.map(pvPartitionCols).getOrElse(Nil)
     // a pv table keeps its Hive-metadata layout through an overwrite —
     // partitionSchema must never flip mid-table (auto-advancing
@@ -2194,7 +2190,8 @@ class GraftTable(
   def append(df: DataFrame, statsCol: Option[String] = None): Long =
     appendStats(df, statsCol.toSeq)
 
-  /** Append collecting multi-column per-file stats (see overwriteStats).
+  /** Append collecting multi-column per-file stats (see overwriteStats;
+    * none = the table's [[statsContract]]).
     * On a partitioned table the batch is clustered on the partition
     * columns and their stats are recorded, preserving the layout.
     */
@@ -2233,16 +2230,13 @@ class GraftTable(
     // computed here, so everything downstream (pv split, clustering,
     // stats, schema union) sees it like any stored column
     val df = applyIdentity(applyGenerated(dfIn, recompute = false))
-    // a stats-less API append on a table with a DECLARED stats contract
-    // (CREATE ... STATS / a generated partition column's auto-added
-    // sources) inherits the declaration — the pruning contract should
-    // not depend on which write surface the batch came through
-    val statsCols =
-      if (statsColsIn.nonEmpty) statsColsIn
-      else declaredStatsCols.filter(c =>
-        df.columns.exists(_.equalsIgnoreCase(c)))
     if (changeFeedOn) requireNoReservedCdfCols(df.columns.toSeq)
     val wbase = latestManifest
+    // a stats-less append inherits the stats contract: the pruning
+    // contract must not depend on which write surface the batch came
+    // through
+    val statsCols =
+      if (statsColsIn.nonEmpty) statsColsIn else inheritedStats(wbase, df.columns.toSeq)
     val pvCols = wbase.map(pvPartitionCols).getOrElse(Nil)
     // a pv-table batch missing a partition column lands in the NULL
     // slice (Hive default partition) — the same verdict a null value
@@ -2405,9 +2399,9 @@ class GraftTable(
     require(extra.isEmpty,
       s"COPY INTO: source columns ${extra.mkString(", ")} do not exist on " +
         s"the table (${tableSchema.fieldNames.mkString(", ")})")
-    val pCols = m.partitionCols.getOrElse(Nil)
     val wantedStats = (
-      (if (statsCols.nonEmpty) statsCols else defaultStatsCols(m)) ++ pCols
+      (if (statsCols.nonEmpty) statsCols else statsContract(m)) ++
+        m.partitionCols.getOrElse(Nil)
     ).distinct.filter(c => srcSchema.fieldNames.exists(_.equalsIgnoreCase(c)))
     // pv tables NEVER take the link path: a linked file would carry its
     // partition values in the DATA (no pv tuple), and one relation
@@ -2530,26 +2524,41 @@ class GraftTable(
     v
   }
 
-  /** The table's current stats-column contract, read off an existing
-    * file's entry (primary first — the ordering merge pruning relies
-    * on); empty on a stats-less table.
+  /** The stats contract: the columns whose per-file min/max every write
+    * carries, so the next merge or read prunes no matter which surface
+    * wrote the files. It is the stats columns the live files carry, as
+    * logical names kept to the current schema, read from the manifest
+    * alone (inline entries plus chunk-ref aggregate ranges; no chunk is
+    * opened, so an append on a 1M-file table stays O(inline)). The
+    * existing primary (the first inline file's stats column) goes first,
+    * the rest sorted; when no file carries stats the declared
+    * [[declaredStatsCols]] applies. Partition columns are appended.
     */
-  private def defaultStatsCols(m: Manifest): Seq[String] = {
+  private[graft] def statsContract(m: Manifest): Seq[String] = {
     val p2l = m.logicalByPhysical
-    filesOf(m).headOption.map { f =>
-      val primary = f.statsCol.map(c => p2l.getOrElse(c, c)).toSeq
-      val rest = StatsPruning.fileRanges(f).keys.map(c => p2l.getOrElse(c, c))
-        .filterNot(primary.contains).toSeq.sorted
-      primary ++ rest
-    }.filter(_.nonEmpty).getOrElse(declaredStatsCols)
+    val current = StructType.fromDDL(m.schema).fieldNames.toSet
+    def live(cs: Seq[String]) = cs.map(c => p2l.getOrElse(c, c)).filter(current.contains)
+    val primary = live(m.files.flatMap(_.statsCol).take(1))
+    val carried = live((m.files.flatMap(StatsPruning.fileRanges(_).keys) ++
+      m.chunks.getOrElse(Nil).flatMap(StatsPruning.chunkRanges(_).keys)).distinct)
+    val cols =
+      if (carried.isEmpty) declaredStatsCols.filter(current.contains)
+      else primary ++ carried.filterNot(primary.contains).sorted
+    (cols ++ m.partitionCols.getOrElse(Nil)).distinct
   }
+
+  /** [[statsContract]] as the batch with columns `cols` spells it, for a
+    * write whose caller named no stats columns (none on a new table).
+    */
+  private def inheritedStats(base: Option[Manifest], cols: Seq[String]): Seq[String] =
+    base.toSeq.flatMap(statsContract).flatMap(c => cols.find(_.equalsIgnoreCase(c)))
 
   /** The DECLARED stats-column contract (`graft.statsColumns` property),
     * recorded by schema-first `CREATE TABLE (cols) ... STATS (...)`. The
-    * file-derived contract (what the files actually carry) wins whenever
-    * files exist; this declaration covers the gap between a zero-file
-    * create and the first write, so a schema-first table's very first
-    * INSERT already lands min/max stats and every later merge prunes.
+    * file-derived [[statsContract]] wins whenever files carry stats;
+    * this declaration covers the gap between a zero-file create and the
+    * first write, so a schema-first table's very first INSERT already
+    * lands min/max stats and every later merge prunes.
     */
   def declaredStatsCols: Seq[String] =
     properties.getOrElse(GraftTable.StatsProperty, "")
@@ -2626,14 +2635,7 @@ class GraftTable(
     val m = latestManifest.getOrElse(
       throw new IllegalStateException(s"compact of uncommitted table $root"))
     val all = filesOf(m) // compaction is a whole-table op by definition
-    // file stats keys are PHYSICAL; the snapshot frame is logical
-    val statsCols = {
-      val multi = all.flatMap(_.ranges.map(_.keys.toSeq).getOrElse(Nil)).distinct
-      val p2l = m.logicalByPhysical
-      (if (multi.nonEmpty) multi else all.flatMap(_.statsCol).distinct)
-        .map(c => p2l.getOrElse(c, c))
-        .filter(StructType.fromDDL(m.schema).fieldNames.contains)
-    }
+    val statsCols = statsContract(m)
     val totalRows = math.max(m.allRows, 1L)
     val nFiles = math.max(1, math.ceil(totalRows.toDouble / targetFileRows).toInt)
     // row-id-carrying read when tracking: compaction hands every
@@ -2692,11 +2694,7 @@ class GraftTable(
       f.liveRows < targetFileRows || f.dv.isDefined)
     if (work.isEmpty || (work.length == 1 && work.head.dv.isEmpty))
       return m.version
-    val statsCols = {
-      val multi = work.flatMap(_.ranges.map(_.keys.toSeq).getOrElse(Nil)).distinct
-      (if (multi.nonEmpty) multi else work.flatMap(_.statsCol).distinct)
-        .map(c => p2l.getOrElse(c, c)).filter(schema.fieldNames.contains)
-    }
+    val statsCols = statsContract(m)
     val live = math.max(1L, work.map(_.liveRows).sum)
     val nFiles = math.max(1, math.ceil(live.toDouble / targetFileRows).toInt)
     val df = readForRewrite(m, work, schema)
@@ -2873,20 +2871,23 @@ class GraftTable(
     } yield shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), i * cols.size + j))
       .reduce((a, b) => a.bitwiseOR(b))
     val pvCols = pvPartitionCols(m)
+    // the z columns lead, and the stats contract rides along so the
+    // rewrite keeps the key and partition ranges later merges prune on
+    val statsCols = (cols ++ statsContract(m)).distinct
     val files =
       if (pvCols.nonEmpty)
         // pv tables z-order WITHIN each partition tuple: the pv funnel
         // hash-routes every tuple to one task, and the Morton rank rides
         // as the within-tuple sort expression — per-file z ranges stay
         // tight inside the layout the tuple structure already provides
-        writePvDataFiles(df, pvCols, cols, m.mapping,
+        writePvDataFiles(df, pvCols, statsCols, m.mapping,
           maxFileRows = Some(targetFileRows), sortWithin = Seq(z))
       else {
         val arranged = df.withColumn("__z", z)
           .repartitionByRange(nFiles, col("__z"))
           .sortWithinPartitions("__z")
           .drop("__z")
-        writeDataFiles(arranged, cols, m.mapping)
+        writeDataFiles(arranged, statsCols, m.mapping)
       }
     commit(StructType.fromDDL(m.schema), files, Some(m.version), op = "zorder",
       partitionCols = m.partitionCols)

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.GraftTable
+import graft.sources.{GraftTable, StatsPruning}
 
 /** Compaction + vacuum — the maintenance half of the table format. */
 class MaintenanceSpec extends AnyFunSuite {
@@ -125,6 +125,26 @@ class MaintenanceSpec extends AnyFunSuite {
       rs.zip(Seq(2L, 2L, 2L, 2L)).forall { case ((lo, hi), v) => v >= lo && v <= hi })
     assert(hit <= ranges.size / 4,
       s"point (2,2,2,2) intersects $hit of ${ranges.size} files")
+  }
+
+  test("z-order keeps the stats contract: pk ranges survive and a pk merge prunes") {
+    val t = GraftTable(spark, Files.createTempDirectory("graft-zpk").toString)
+    // a tracks id and b is two-valued, so z-ordering on (a, b) leaves
+    // each file a tight id range
+    val df = (1L to 4096L).map(i => (i, i / 8, i % 2, s"v$i")).toDF("id", "a", "b", "v")
+    t.overwriteStats(df, Seq("id"))
+    t.compactZOrder("a", "b", targetFileRows = 512) // → 8 files
+    val m = t.latestManifest.get
+    assert(m.operation.contains("zorder") && t.snapshot.count() == 4096)
+    assert(m.files.size >= 4)
+    assert(m.files.forall(f => StatsPruning.fileRanges(f).contains("id")),
+      s"z-order dropped the id stats: ${m.files.map(_.ranges)}")
+    val before = m.files.map(_.path).toSet
+    t.merge(Seq((100L, 12L, 0L, "x")).toDF("id", "a", "b", "v"), Seq("id"))
+      .whenMatchedUpdateAll().whenNotMatchedInsertAll().execute()
+    val survivors = before.intersect(t.latestManifest.get.files.map(_.path).toSet)
+    assert(survivors.size >= before.size / 2,
+      s"point merge on id should leave at least half the files, kept ${survivors.size}/${before.size}")
   }
 
   test("vacuum removes superseded files but keeps live versions readable") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -107,5 +108,26 @@ class SimilaritySpec extends AnyFunSuite {
     val recall = (exact & approx).size.toDouble / exact.size
     info(f"ANN recall@3: $recall%.3f")
     assert(recall >= 0.5, f"recall $recall%.3f below 0.5")
+  }
+
+  test("an input column named like a helper column fails loudly, never overwritten") {
+    val s = spark
+    import s.implicits._
+    val corpus = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f))).toDF("vec_id", "embedding")
+    val qs = Seq((1L, Seq(1.0f, 0.0f))).toDF("qid", "qvec")
+    val centroids = Seq(Seq(1.0, 0.0), Seq(0.0, 1.0))
+    val calls: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
+      "bruteForceTopK" -> ((q, c) => Similarity.bruteForceTopK(q, c, 1)),
+      "ivfTopK" -> ((q, c) => Similarity.ivfTopK(q, c, 1, centroids, nprobe = 1)),
+      "lshTopK" -> ((q, c) => Similarity.lshTopK(q, c, 1, dim = 2)),
+      "cosineNearDupAgainst" -> ((_, c) => Similarity.cosineNearDupAgainst(c, corpus, 0.9)))
+    for ((name, call) <- calls; h <- Seq("__cnorm", "__qnorm", "__bnorm", "__cid")) {
+      val e = intercept[IllegalArgumentException](call(qs, corpus.withColumn(h, lit(7.0))))
+      assert(e.getMessage.contains(h), s"$name with $h: ${e.getMessage}")
+    }
+    // the query side is checked too, and the match is case-insensitive
+    intercept[IllegalArgumentException](
+      Similarity.bruteForceTopK(qs.withColumn("__QNORM", lit(1.0)), corpus, 1))
+    assert(Similarity.bruteForceTopK(qs, corpus, 1, excludeSelf = false).count() == 1)
   }
 }

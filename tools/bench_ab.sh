@@ -18,7 +18,7 @@ NEW_REF="${2:-HEAD}"
 SF_DIR="${3:-/root/testdata/sf0.1}"
 PASSES="${4:-3}"
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
-WORK="$(mktemp -d /tmp/bench-ab.XXXXXX)"
+WORK="$(mktemp -d "${TMPDIR:-/tmp}/bench-ab.XXXXXX")"
 SPARK_SUBMIT="${SPARK_SUBMIT:-/opt/spark/bin/spark-submit}"
 CPUS="${SPARK_GRAFT_CPUS:-32}"
 
