@@ -133,6 +133,7 @@ object Curation {
   def quotaPerGroup(df: DataFrame, groupCol: String, ordering: Seq[Column],
       k: Int): DataFrame = {
     require(k > 0, s"need positive quota, got $k")
+    HelperCols.requireAbsent("quotaPerGroup", Seq("__rank"), df)
     val w = Window.partitionBy(groupCol).orderBy(ordering: _*)
     df.withColumn("__rank", row_number().over(w))
       .filter(col("__rank") <= k)

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.functions.TextFunctions._
 
@@ -27,16 +28,29 @@ object Dedup {
     * normalized/hashed form at scale — xxhash64(text) keeps the shuffle
     * narrow).
     */
-  def exactGroups(df: DataFrame, keyExpr: Column, idCol: String): DataFrame =
+  def exactGroups(df: DataFrame, keyExpr: Column, idCol: String): DataFrame = {
+    HelperCols.requireAbsent("exactGroups", Seq("__key"), df)
     df.groupBy(keyExpr.as("__key"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_dups"))
       .select("keep_id", "n_dups")
+  }
 
   /** Exact dedup returning the surviving rows (min id wins per group). */
   def exactDedup(df: DataFrame, keyExpr: Column, idCol: String): DataFrame = {
+    HelperCols.requireAbsent("exactDedup", Seq("__rn"), df)
     val w = Window.partitionBy(keyExpr).orderBy(col(idCol))
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
+  }
+
+  /** Persist `df` unless an identical plan is already cached (e.g. the
+    * caller's own sketch); true when this call cached it and owns the
+    * release.
+    */
+  private def persistOnce(df: DataFrame): Boolean = {
+    val owned = df.storageLevel == StorageLevel.NONE
+    if (owned) df.persist(StorageLevel.MEMORY_AND_DISK)
+    owned
   }
 
   /** MinHash+LSH near-duplicate candidate pairs with estimated Jaccard.
@@ -70,8 +84,8 @@ object Dedup {
     // materialize. A caller-provided sketch is used as-is (the caller
     // owns its lifecycle — persist it before fanning out).
     val sigs = precomputedSigs.getOrElse(
-      minhashSigs(df, idCol, textCol, shingleSize, numPerms)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      minhashSigs(df, idCol, textCol, shingleSize, numPerms))
+    val ownSigs = precomputedSigs.isEmpty && persistOnce(sigs)
     sigs.count() // materialize BEFORE the self-join: its two branches run
     // as independent stages and would otherwise race the lazy cache,
     // computing the expensive signature subtree twice
@@ -93,10 +107,10 @@ object Dedup {
     // materialize the (small) pair set, then release the sketch cache —
     // otherwise every invocation pins another signature dataset forever.
     // The returned frame stays cached; callers may unpersist it.
-    val out = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    if (precomputedSigs.isEmpty) sigs.unpersist(false)
-    out
+    persistOnce(pairs)
+    pairs.count()
+    if (ownSigs) sigs.unpersist(false)
+    pairs
   }
 
   /** Incremental near-dup: MinHash+LSH candidates between a NEW batch
@@ -128,12 +142,12 @@ object Dedup {
     // caller-provided ones are used as-is — the caller owns their
     // lifecycle
     val bSigs = batchSigs.getOrElse(
-      minhashSigs(batch, idCol, textCol, shingleSize, numPerms)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      minhashSigs(batch, idCol, textCol, shingleSize, numPerms))
+    val ownB = batchSigs.isEmpty && persistOnce(bSigs)
     bSigs.count()
     val cSigs = corpusSigs.getOrElse(
-      minhashSigs(corpus, idCol, textCol, shingleSize, numPerms)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      minhashSigs(corpus, idCol, textCol, shingleSize, numPerms))
+    val ownC = corpusSigs.isEmpty && persistOnce(cSigs)
     cSigs.count()
     def banded(sigs: DataFrame): DataFrame = sigs.select(col("id"),
       posexplode(lshBands(col("sig"), bands, rowsPerBand)).as(Seq("band_i", "band_h")))
@@ -151,11 +165,11 @@ object Dedup {
       .withColumn("est_jaccard", minhashJaccard(col("sig_a"), col("sig_b")))
       .filter(col("est_jaccard") >= minJaccard)
       .select("batch_id", "corpus_id", "est_jaccard")
-    val out = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    if (batchSigs.isEmpty) bSigs.unpersist(false)
-    if (corpusSigs.isEmpty) cSigs.unpersist(false)
-    out
+    persistOnce(pairs)
+    pairs.count()
+    if (ownB) bSigs.unpersist(false)
+    if (ownC) cSigs.unpersist(false)
+    pairs
   }
 
   /** Ingestion dedup gate: annotate a NEW batch with the duplicate
@@ -194,7 +208,7 @@ object Dedup {
     // ONE batch sketch feeds both candidate generators (each document is
     // hashed exactly once per cycle)
     val bSigs = minhashSigs(batch, idCol, textCol, shingleSize, numPerms)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ownB = persistOnce(bSigs)
     bSigs.count()
     // candidates: batch×corpus plus batch-internal — est filter stays
     // off (0.0); the EXACT verify below is the one decision point.
@@ -224,7 +238,7 @@ object Dedup {
     out.count()
     vsCorpusRaw.unpersist(false)
     inBatchRaw.unpersist(false)
-    bSigs.unpersist(false)
+    if (ownB) bSigs.unpersist(false)
     out
   }
 
@@ -253,7 +267,7 @@ object Dedup {
     // every token × 64 bits and must not be recomputed per join side
     val hashed = df.select(col(idCol).as("id"),
       simhash64(tokens(col(textCol))).as("sim"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ownHashed = persistOnce(hashed)
     hashed.count() // see minhashPairs: avoid the lazy-cache double compute
     val blocked = hashed.select(col("id"),
       posexplode(simhashBlocks(col("sim"), blocks)).as(Seq("blk_i", "blk_v")))
@@ -268,10 +282,10 @@ object Dedup {
       .withColumn("hamming", hamming64(col("sim_a"), col("sim_b")))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
-    val out = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    hashed.unpersist(false)
-    out
+    persistOnce(pairs)
+    pairs.count()
+    if (ownHashed) hashed.unpersist(false)
+    pairs
   }
 
   /** Connected components over a near-dup pair graph — the
@@ -469,6 +483,7 @@ object Dedup {
     * schemas.
     */
   def dedupByClusters(df: DataFrame, components: DataFrame, idCol: String): DataFrame = {
+    HelperCols.requireAbsent("dedupByClusters", Seq("__cc_comp", "__cc_rep"), df)
     val labels = components.select(col("id").as(idCol), col("component").as("__cc_comp"))
     val rep = df.select(col(idCol)).join(labels, Seq(idCol))
       .groupBy("__cc_comp").agg(min(col(idCol)).as("__cc_rep"))

@@ -49,6 +49,7 @@ object Percentiles {
       quantiles: Seq[(Double, String)], accuracy: Int = 10000,
       maxGroups: Int = 64, smallBytes: Long = 256L << 20,
       sortBytes: Long = 16L << 30): DataFrame = {
+    HelperCols.requireAbsent("exact", Seq("__t", "__pick", "__r"), dfRaw)
     // NULL values are excluded up front (quantile_cont semantics; the
     // aggregate paths ignore them implicitly, but the sort path would
     // rank them FIRST and silently shift every order statistic)
@@ -201,6 +202,7 @@ object Percentiles {
   def exactBySort(
       dfRaw: DataFrame, groupCol: String, valueCol: String,
       quantiles: Seq[(Double, String)]): DataFrame = {
+    HelperCols.requireAbsent("exactBySort", Seq("__n", "__rn"), dfRaw)
     val df = dfRaw.filter(col(valueCol).isNotNull) // quantile_cont semantics
     val counts = df.groupBy(groupCol).agg(count(lit(1)).as("__n"))
     val w = Window.partitionBy(groupCol).orderBy(valueCol)

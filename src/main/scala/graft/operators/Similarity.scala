@@ -34,18 +34,7 @@ object Similarity {
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   /** Helper columns the search functions below add to their inputs. */
-  private val HelperCols = Seq("__cnorm", "__qnorm", "__bnorm", "__cid")
-
-  /** Fails loudly when an input frame already has a helper column name:
-    * the function would otherwise silently overwrite the caller's column.
-    */
-  private def requireNoHelperCols(fn: String, inputs: DataFrame*): Unit = {
-    val hit = inputs.flatMap(_.columns)
-      .filter(c => HelperCols.exists(_.equalsIgnoreCase(c))).distinct
-    require(hit.isEmpty,
-      s"$fn: input column(s) ${hit.mkString(", ")} use a name reserved for " +
-        s"its helper columns (${HelperCols.mkString(", ")}); rename them first")
-  }
+  private val Helpers = Seq("__cnorm", "__qnorm", "__bnorm", "__cid")
 
   /** Exact top-k neighbors for each query vector.
     *
@@ -69,7 +58,7 @@ object Similarity {
     // below is the same expression tree (dot / (norm(q) · norm(c))), so
     // every sim is bit-identical — the norm is just evaluated corpus-
     // rows + query-rows times instead of corpus × queries times.
-    requireNoHelperCols("bruteForceTopK", queries, corpus)
+    HelperCols.requireAbsent("bruteForceTopK", Helpers, queries, corpus)
     val paired = corpus.withColumn("__cnorm", norm(col(vecCol)))
       .crossJoin(broadcast(queries.withColumn("__qnorm", norm(col(qvecCol)))))
     val scored = (if (excludeSelf) paired.filter(col(qidCol) =!= col(idCol)) else paired)
@@ -92,7 +81,7 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     // per-side norm precompute — same rationale (and same bit-identical
     // expression shape) as bruteForceTopK
-    requireNoHelperCols("cosineNearDupAgainst", batch, corpus)
+    HelperCols.requireAbsent("cosineNearDupAgainst", Helpers, batch, corpus)
     val b = broadcast(batch.select(
       col(idCol).as("batch_id"), col(vecCol).as("__bvec"),
       norm(col(vecCol)).as("__bnorm")))
@@ -288,7 +277,7 @@ object Similarity {
     // corpus × spill / nprobe pairs — recomputing both norms per pair
     // tripled the scoring arithmetic; the division keeps the exact
     // expression shape so every sim is bit-identical
-    requireNoHelperCols("ivfTopK", queries, corpus)
+    HelperCols.requireAbsent("ivfTopK", Helpers, queries, corpus)
     val assigned = corpus.withColumn("__cnorm", norm(col(vecCol)))
       .withColumn("__cid",
         explode(centroidTopCids(col(vecCol), centroids, spill)))
@@ -328,7 +317,7 @@ object Similarity {
     // ONE equi-join on (tbl, bucket) — not a scan+join per table. At
     // corpus scale that is `tables`× fewer scans; the broadcast side is
     // queries × tables × (1+probes) rows, still tiny.
-    requireNoHelperCols("lshTopK", queries, corpus)
+    HelperCols.requireAbsent("lshTopK", Helpers, queries, corpus)
     val allPlanes = (0 until tables).map(t => hyperplanes(numPlanes, dim, seed = 42L + t))
     def buckets(vec: Column): Column =
       array(allPlanes.zipWithIndex.map { case (planes, t) =>

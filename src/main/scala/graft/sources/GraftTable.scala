@@ -868,30 +868,7 @@ class GraftTable(
     val dved = filesOf(m).filter(f => f.dv.isDefined ||
       (retiredSet.nonEmpty &&
         footerFields(Paths.get(root, f.path)).exists(retiredSet.contains)))
-    if (dved.isEmpty) return m.version
-    val schema = StructType.fromDDL(m.schema)
-    val statsCols = statsContract(m)
-    val live = dved.map(_.liveRows).sum
-    val nFiles = math.max(1, math.ceil(live.toDouble / targetFileRows).toInt)
-    val df = readForRewrite(m, dved, schema)
-    val pvCols = pvPartitionCols(m)
-    val newFiles =
-      if (pvCols.nonEmpty)
-        // pv table: purged rewrites stay tuple-pure like every write
-        writePvDataFiles(df, pvCols, statsCols, m.mapping,
-          maxFileRows = Some(targetFileRows),
-          sortWithin = statsCols
-            .filterNot(c => pvCols.exists(_.equalsIgnoreCase(c))).map(col))
-      else {
-        val partCols = m.partitionCols.getOrElse(Nil)
-        val arranged =
-          if (partCols.nonEmpty) clusterBy(df, partCols)
-          else if (statsCols.nonEmpty) df.repartitionByRange(nFiles, statsCols.map(col): _*)
-          else df.repartition(nFiles)
-        writeDataFiles(arranged, statsCols, m.mapping)
-      }
-    swap(dved.map(_.path).toSet, newFiles, schema, m.version,
-      mayConflict = _ => false, op = "purge")
+    rewriteLayout(m, dved, targetFileRows, "purge", contractOrder(m))
   }
 
   /** Commit history, newest first (DESCRIBE HISTORY parity; versions
@@ -2108,7 +2085,8 @@ class GraftTable(
     * slice of the partition space, and every later write (append, merge,
     * compact) maintains the clustering. A one-day incremental batch then
     * overlaps only that day's files — include the partition columns in
-    * the merge primary key and pruning composes multiplicatively.
+    * the merge primary key and pruning composes multiplicatively. No
+    * stats columns = the table's [[statsContract]], as every overwrite.
     */
   def overwritePartitioned(
       dfIn: DataFrame, partCols: Seq[String], statsCols: Seq[String] = Nil): Long = {
@@ -2121,15 +2099,18 @@ class GraftTable(
     // re-declaring the same columns routes through the pv funnel; a
     // DIFFERENT declaration would flip partitionSchema under live
     // relations — refused (re-create the table to re-layout)
-    latestManifest.map(pvPartitionCols).filter(_.nonEmpty).foreach { pvCols =>
+    val base = latestManifest
+    base.map(pvPartitionCols).filter(_.nonEmpty).foreach { pvCols =>
       require(pvCols.map(_.toLowerCase).toSet == partCols.map(_.toLowerCase).toSet,
         s"cannot re-declare partition columns of Hive-import table $root " +
           s"from (${pvCols.mkString(", ")}) to (${partCols.mkString(", ")}); " +
           "re-create the table to change the layout")
       return overwriteStatsPrepared(df, statsCols)
     }
-    val files = writeDataFiles(clusterBy(df, partCols), (partCols ++ statsCols).distinct)
-    commit(df.schema, files, expectedBase = latestVersion, op = "overwrite",
+    val stats =
+      if (statsCols.nonEmpty) statsCols else inheritedStats(base, df.columns.toSeq)
+    val files = writeDataFiles(clusterBy(df, partCols), (partCols ++ stats).distinct)
+    commit(df.schema, files, expectedBase = base.map(_.version), op = "overwrite",
       partitionCols = Some(partCols))
   }
 
@@ -2223,6 +2204,25 @@ class GraftTable(
   private def requireNoReservedCdfCols(cols: Seq[String]): Unit =
     GraftTable.requireNoReservedCdfCols(cols)
 
+  /** Rebase guard: files holding `cols` under `written` physical names
+    * may only be committed onto a moved `base` if the mapping re-derived
+    * for the `committed` schema keeps those names. A concurrent RENAME or
+    * DROP breaks that — the re-unioned column would get a fresh physical
+    * name the files lack and read as NULL (a dropped one coming back) —
+    * so fail with a retryable conflict naming the columns instead.
+    */
+  private def requireMappingStable(
+      op: String, cols: Seq[String], written: Map[String, String],
+      committed: StructType, base: Option[Manifest]): Unit = {
+    val rebased = GraftTable.derivedMapping(committed.fieldNames.toSeq, base)
+    val broken = cols.filter(c => rebased.getOrElse(c, c) != written.getOrElse(c, c))
+    if (broken.nonEmpty)
+      throw new java.util.ConcurrentModificationException(
+        s"$op conflict at $root: a concurrent schema change (rename/drop) " +
+          s"re-mapped column(s) ${broken.mkString(", ")} after this commit's " +
+          s"files were written; re-run the $op against the current schema")
+  }
+
   private def appendImpl(
       dfIn: DataFrame, statsColsIn: Seq[String], changeFeedOn: Boolean,
       txn: Option[String] = None, txnApp: Option[String] = None): Long = {
@@ -2254,9 +2254,8 @@ class GraftTable(
     val pCols = wbase.flatMap(_.partitionCols).getOrElse(Nil)
       .filter(c => dfP.columns.exists(_.equalsIgnoreCase(c)))
     // physical naming from the base at WRITE time; the retry loop below
-    // may rebase the commit, and before committing onto a MOVED base it
-    // re-checks that the rebased mapping still assigns these exact
-    // physical names (a concurrent RENAME/DROP COLUMN invalidates them)
+    // may rebase the commit, and before committing onto a MOVED base
+    // [[requireMappingStable]] re-checks these physical names
     val writtenMapping = GraftTable.derivedMapping(dfP.columns.toSeq, wbase)
     // existing columns keep the TABLE's declared type — an appended
     // batch with a drifted type is cast, not landed verbatim
@@ -2292,29 +2291,9 @@ class GraftTable(
         base.map(m => unionSchema(StructType.fromDDL(m.schema), dfP.schema))
           .getOrElse(dfP.schema),
         base.map(pvPartitionCols).getOrElse(Nil))
-      // rebase guard: committing onto a base that moved since write time
-      // is only sound if the re-derived column mapping still reads the
-      // batch's files under the physical names they were WRITTEN with. A
-      // concurrent RENAME re-points a logical name at a different
-      // physical, and a concurrent DROP retires one — either way the
-      // re-unioned logical column would get a fresh physical name while
-      // the batch's files carry the old one, so its appended values
-      // would silently read as NULL. Detect that and fail with a
-      // retryable conflict (the caller re-runs the append against the
-      // new schema) instead of committing a mapping that mismatches the
-      // files on disk.
-      if (base.map(_.version) != wbase.map(_.version)) {
-        val rebased = GraftTable.derivedMapping(
-          mergedSchema.fieldNames.toSeq, base)
-        val broken = dfP.columns.toSeq.filter { c =>
-          rebased.getOrElse(c, c) != writtenMapping.getOrElse(c, c) }
-        if (broken.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"append conflict at $root: a concurrent schema change " +
-              s"(rename/drop) re-mapped column(s) ${broken.mkString(", ")} " +
-              "after this batch's files were written; re-run the append " +
-              "against the current schema")
-      }
+      if (base.map(_.version) != wbase.map(_.version))
+        requireMappingStable("append", dfP.columns.toSeq, writtenMapping,
+          mergedSchema, base)
       try {
         // chunk-local: the base's chunks ride by reference; only the
         // inline delta (base inline + this batch) is re-listed
@@ -2634,35 +2613,8 @@ class GraftTable(
   def compact(targetFileRows: Long = 1000000L): Long = {
     val m = latestManifest.getOrElse(
       throw new IllegalStateException(s"compact of uncommitted table $root"))
-    val all = filesOf(m) // compaction is a whole-table op by definition
-    val statsCols = statsContract(m)
-    val totalRows = math.max(m.allRows, 1L)
-    val nFiles = math.max(1, math.ceil(totalRows.toDouble / targetFileRows).toInt)
-    // row-id-carrying read when tracking: compaction hands every
-    // surviving row its id and the rewrite materializes them — ids are
-    // stable across OPTIMIZE by construction
-    val df = readForRewrite(m, all, StructType.fromDDL(m.schema))
-    // pv tables re-pack WITHIN partition tuples (the layout is the
-    // partitioning); the sort keeps stats-column ranges tight per file
-    val pvCols = pvPartitionCols(m)
-    if (pvCols.nonEmpty) {
-      val files = writePvDataFiles(df, pvCols, statsCols, m.mapping,
-        maxFileRows = Some(targetFileRows),
-        sortWithin = statsCols
-          .filterNot(c => pvCols.exists(_.equalsIgnoreCase(c))).map(col))
-      return commit(StructType.fromDDL(m.schema), files, Some(m.version),
-        op = "compact", partitionCols = m.partitionCols)
-    }
-    // partitioned tables keep the partition columns as the PRIMARY range
-    // key so compaction never smears a file across partition values
-    val rangeCols = (m.partitionCols.getOrElse(Nil) ++ statsCols).distinct
-    val arranged = rangeCols.headOption match {
-      case Some(_) => df.repartitionByRange(nFiles, rangeCols.map(col): _*)
-      case None => df.repartition(nFiles)
-    }
-    val files = writeDataFiles(arranged, rangeCols, m.mapping)
-    commit(StructType.fromDDL(m.schema), files, Some(m.version), op = "compact",
-      partitionCols = m.partitionCols)
+    // compaction is a whole-table op by definition
+    rewriteLayout(m, filesOf(m), targetFileRows, "compact", contractOrder(m))
   }
 
   /** Predicate-scoped compaction (`OPTIMIZE ... WHERE` parity): bin-pack
@@ -2694,35 +2646,50 @@ class GraftTable(
       f.liveRows < targetFileRows || f.dv.isDefined)
     if (work.isEmpty || (work.length == 1 && work.head.dv.isEmpty))
       return m.version
-    val statsCols = statsContract(m)
-    val live = math.max(1L, work.map(_.liveRows).sum)
-    val nFiles = math.max(1, math.ceil(live.toDouble / targetFileRows).toInt)
-    val df = readForRewrite(m, work, schema)
+    rewriteLayout(m, work, targetFileRows, "compact", contractOrder(m))
+  }
+
+  /** THE maintenance rewrite (compact, OPTIMIZE WHERE, Z-order, REORG
+    * PURGE pick the files): read them DV-masked with their row ids, then
+    * write ceil(live rows / targetFileRows) files range-partitioned and
+    * sorted on the partition columns then `order(read)` — pv tables
+    * re-pack within each tuple — with stats `leadStats` then the stats
+    * contract. The [[swap]] commit conflicts only with a concurrent
+    * commit that removed or re-masked a rewritten file; appends and
+    * disjoint merges landing meanwhile are rebased over.
+    */
+  private def rewriteLayout(
+      m: Manifest, files: Seq[ManifestFile], targetFileRows: Long, op: String,
+      order: DataFrame => Seq[Column],
+      leadStats: Seq[String] = Nil): Long = {
+    if (files.isEmpty) return m.version
+    val schema = StructType.fromDDL(m.schema)
+    val nFiles = math.max(1,
+      math.ceil(files.map(_.liveRows).sum.toDouble / targetFileRows).toInt)
+    val df = readForRewrite(m, files, schema)
+    val statsCols = (leadStats ++ statsContract(m)).distinct
+    val tail = order(df)
     val pvCols = pvPartitionCols(m)
-    val files =
+    val added =
       if (pvCols.nonEmpty)
-        // pv tables re-pack WITHIN partition tuples (the tuple IS the
-        // layout; a file never spans tuples by construction) — the cold
-        // rest of the table stays untouched exactly like the clustered
-        // path
         writePvDataFiles(df, pvCols, statsCols, m.mapping,
-          maxFileRows = Some(targetFileRows),
-          sortWithin = statsCols
-            .filterNot(c => pvCols.exists(_.equalsIgnoreCase(c))).map(col))
+          maxFileRows = Some(targetFileRows), sortWithin = tail)
       else {
-        val partCols = m.partitionCols.getOrElse(Nil)
-        val rangeCols = (partCols ++ statsCols).distinct
-        val arranged = rangeCols.headOption match {
-          case Some(_) => df.repartitionByRange(nFiles, rangeCols.map(col): _*)
-          case None => df.repartition(nFiles)
-        }
-        writeDataFiles(arranged, rangeCols, m.mapping)
+        val keys = m.partitionCols.getOrElse(Nil).map(col) ++ tail
+        writeDataFiles(
+          if (keys.isEmpty) df.repartition(nFiles)
+          else df.repartitionByRange(nFiles, keys: _*).sortWithinPartitions(keys: _*),
+          statsCols, m.mapping)
       }
-    // content-preserving rewrite: concurrent appends never conflict
-    // (mayConflict=false); a concurrent rewrite of the same file still
-    // trips the removed-meanwhile check in swap
-    swap(work.map(_.path).toSet, files, schema, m.version,
-      mayConflict = _ => false, op = "compact")
+    swap(files.map(_.path).toSet, added, schema, m.version,
+      mayConflict = _ => false, op = op)
+  }
+
+  /** [[rewriteLayout]]'s order for all but z-order: the stats contract. */
+  private def contractOrder(m: Manifest): DataFrame => Seq[Column] = {
+    val part = m.partitionCols.getOrElse(Nil)
+    val cols = statsContract(m).filterNot(c => part.exists(_.equalsIgnoreCase(c)))
+    _ => cols.map(col)
   }
 
   /** Opt-in auto-compaction (Delta autoCompact parity), run post-commit
@@ -2804,11 +2771,17 @@ class GraftTable(
           s"Hive-import table $root is a no-op (the value is constant " +
           "within each partition); z-order on data columns instead")
     }
-    val totalRows = math.max(m.allRows, 1L)
-    val nFiles = math.max(1, math.ceil(totalRows.toDouble / targetFileRows).toInt)
-    // row-id-carrying read when tracking (ids survive z-order like any
-    // other content-preserving rewrite)
-    val df = readForRewrite(m, filesOf(m), StructType.fromDDL(m.schema))
+    // the z columns lead the stats; the contract keeps the ranges later
+    // merges prune on
+    rewriteLayout(m, filesOf(m), targetFileRows, "zorder",
+      df => Seq(mortonCode(df, cols, math.max(m.allRows, 1L))), leadStats = cols)
+  }
+
+  /** The Morton (bit-interleaved) code of `cols` over `df`, each column
+    * rank-bucketed to 16/N bits against sampled quantile cut points.
+    */
+  private def mortonCode(
+      df: DataFrame, cols: Seq[String], totalRows: Long): Column = {
     val bits = 16 / cols.size
     val nBuckets = 1 << bits
     // Quantile cut points per column -> bucket = #boundaries <= value,
@@ -2865,32 +2838,11 @@ class GraftTable(
       }
     val buckets = cols.map(bucketed)
     // Morton interleave: bit i of column j lands at position i*ncols + j
-    val z = (for {
+    (for {
       i <- 0 until bits
       (b, j) <- buckets.zipWithIndex
     } yield shiftleft(shiftright(b, i).bitwiseAND(lit(1L)), i * cols.size + j))
       .reduce((a, b) => a.bitwiseOR(b))
-    val pvCols = pvPartitionCols(m)
-    // the z columns lead, and the stats contract rides along so the
-    // rewrite keeps the key and partition ranges later merges prune on
-    val statsCols = (cols ++ statsContract(m)).distinct
-    val files =
-      if (pvCols.nonEmpty)
-        // pv tables z-order WITHIN each partition tuple: the pv funnel
-        // hash-routes every tuple to one task, and the Morton rank rides
-        // as the within-tuple sort expression — per-file z ranges stay
-        // tight inside the layout the tuple structure already provides
-        writePvDataFiles(df, pvCols, statsCols, m.mapping,
-          maxFileRows = Some(targetFileRows), sortWithin = Seq(z))
-      else {
-        val arranged = df.withColumn("__z", z)
-          .repartitionByRange(nFiles, col("__z"))
-          .sortWithinPartitions("__z")
-          .drop("__z")
-        writeDataFiles(arranged, statsCols, m.mapping)
-      }
-    commit(StructType.fromDDL(m.schema), files, Some(m.version), op = "zorder",
-      partitionCols = m.partitionCols)
   }
 
   /** RESTORE (Delta parity): make `version`'s contents the newest
@@ -4433,7 +4385,8 @@ class GraftTable(
       txn: Option[String] = None,
       txnApp: Option[String] = None,
       op: String = "merge"): Long = {
-    var base = manifest(baseVersion)
+    val origin = manifest(baseVersion)
+    var base = origin
     var attempts = 0
     while (true) {
       // chunk-local rewrite: a chunk none of whose files were replaced
@@ -4476,6 +4429,11 @@ class GraftTable(
               s"merge conflict at $root: concurrent commit added ${f.path} " +
                 "whose key range overlaps this merge's source batch")
           }
+          // `added` was written under the origin's physical names
+          requireMappingStable(op, schema.fieldNames.toSeq,
+            GraftTable.derivedMapping(schema.fieldNames.toSeq, Some(origin)),
+            GraftTable.unionSchema(StructType.fromDDL(latest.schema), schema),
+            Some(latest))
           base = latest // disjoint — rebase and retry
       }
     }

@@ -193,4 +193,11 @@ class CurationSpec extends AnyFunSuite {
       df, "grp", Seq(col("score").desc, col("id").asc), k = 2)
     assert(kept.select("id").as[Long].collect().toSet == Set(1L, 2L))
   }
+
+  test("quotaPerGroup refuses an input column named like its helper column") {
+    val df = Seq((1L, "g", 0.5, 7L)).toDF("id", "grp", "score", "__rank")
+    val e = intercept[IllegalArgumentException](
+      Curation.quotaPerGroup(df, "grp", Seq(col("score").desc), k = 1))
+    assert(e.getMessage.contains("__rank"), e.getMessage)
+  }
 }

@@ -257,4 +257,16 @@ class DedupSpec extends AnyFunSuite {
       .filter(col("fp") === col("fp2"))
     assert(joined.count() == nDocs, "fingerprint must be deterministic")
   }
+
+  test("exact dedup refuses an input column named like its helper column") {
+    val s = spark
+    import s.implicits._
+    val df = Seq((1L, "a", 9L), (2L, "a", 8L)).toDF("id", "text", "x")
+    for ((h, call) <- Seq[(String, org.apache.spark.sql.DataFrame => Any)](
+        "__rn" -> (d => Dedup.exactDedup(d, col("text"), "id")),
+        "__key" -> (d => Dedup.exactGroups(d, col("text"), "id")))) {
+      val e = intercept[IllegalArgumentException](call(df.withColumnRenamed("x", h)))
+      assert(e.getMessage.contains(h), e.getMessage)
+    }
+  }
 }

@@ -605,4 +605,16 @@ class GraftTableSpec extends AnyFunSuite {
       GraftTable(spark, "/").relPathExpr(col("fp")))
     assert(e.getMessage.contains("filesystem root"))
   }
+
+  test("overwritePartitioned with no stats list keeps the stats contract") {
+    val t = GraftTable(spark, Files.createTempDirectory("graft-opstats").toString)
+    t.overwriteStats((1L to 100L).map(i => (i, i % 3, s"v$i")).toDF("id", "p", "v"),
+      Seq("id"))
+    t.overwritePartitioned(
+      (101L to 200L).map(i => (i, i % 3, s"v$i")).toDF("id", "p", "v"), Seq("p"))
+    val files = t.latestManifest.get.files
+    assert(files.nonEmpty && files.forall(f =>
+      graft.sources.StatsPruning.fileRanges(f).contains("id")),
+      s"re-declared layout dropped the id stats: ${files.map(_.ranges)}")
+  }
 }

@@ -5,7 +5,31 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{GraftTable, StatsPruning}
+import graft.sources.{CommitStore, GraftTable, StatsPruning}
+
+/** A [[CommitStore]] that lands one concurrent commit just before the
+  * first manifest put after [[arm]]: the writer holding this store then
+  * loses the race deterministically, and must rebase or fail.
+  */
+final class RacingStore(root: String) extends CommitStore {
+  private val inner = CommitStore.forRoot(root)
+  @volatile private var pending: Option[() => Unit] = None
+  @volatile var fired = false
+  def arm(concurrent: () => Unit): Unit = { fired = false; pending = Some(concurrent) }
+  override def putIfAbsent(target: java.nio.file.Path, content: String): Boolean = {
+    if (target.getFileName.toString.startsWith("manifest-v")) pending.foreach { f =>
+      pending = None; f(); fired = true
+    }
+    inner.putIfAbsent(target, content)
+  }
+  override def write(target: java.nio.file.Path, content: String): Unit = inner.write(target, content)
+  override def replace(target: java.nio.file.Path, content: String): Unit = inner.replace(target, content)
+  override def read(path: java.nio.file.Path): String = inner.read(path)
+  override def list(dir: java.nio.file.Path): Seq[String] = inner.list(dir)
+  override def exists(path: java.nio.file.Path): Boolean = inner.exists(path)
+  override def mkdirs(dir: java.nio.file.Path): Unit = inner.mkdirs(dir)
+  override def delete(path: java.nio.file.Path): Unit = inner.delete(path)
+}
 
 /** Compaction + vacuum — the maintenance half of the table format. */
 class MaintenanceSpec extends AnyFunSuite {
@@ -244,5 +268,74 @@ class MaintenanceSpec extends AnyFunSuite {
     val deleted = t.vacuum(keepVersions = 1, minAgeMs = 0L)
     assert(deleted > 0, "orphan batch should be reclaimed")
     assert(t.snapshot.count() == 10)
+  }
+
+  /** A table of 4 small files over ids 1..400 (columns id, a, b, v) whose
+    * writes go through a [[RacingStore]].
+    */
+  private def racingTable(prefix: String): (GraftTable, RacingStore) = {
+    val root = Files.createTempDirectory(prefix).toString
+    val store = new RacingStore(root)
+    val t = GraftTable(spark, root, store)
+    def rows(lo: Long, hi: Long) =
+      (lo to hi).map(i => (i, i / 8, i % 2, s"v$i")).toDF("id", "a", "b", "v")
+    t.overwriteStats(rows(1L, 100L), Seq("id"))
+    for (k <- 1 to 3) t.append(rows(k * 100L + 1, k * 100L + 100), Some("id"))
+    (t, store)
+  }
+
+  private def appendConcurrently(t: GraftTable): () => Unit = () => {
+    GraftTable(spark, t.root).append((1001L to 1010L)
+      .map(i => (i, i / 8, i % 2, s"new$i")).toDF("id", "a", "b", "v"), Some("id"))
+    ()
+  }
+
+  private def ids(t: GraftTable): Set[Long] =
+    t.snapshot.select("id").collect().map(_.getLong(0)).toSet
+
+  test("compact racing an append of new keys rebases: every appended row lands") {
+    val (t, store) = racingTable("graft-crace")
+    store.arm(appendConcurrently(t))
+    val v = t.compact(targetFileRows = 250)
+    assert(store.fired, "the concurrent append never ran")
+    assert(ids(t) == ((1L to 400L) ++ (1001L to 1010L)).toSet)
+    assert(t.history.take(2).map(h => (h.version, h.operation)) ==
+      Seq((v, "compact"), (v - 1, "append")))
+  }
+
+  test("z-order racing an append of new keys rebases: every appended row lands") {
+    val (t, store) = racingTable("graft-zrace")
+    store.arm(appendConcurrently(t))
+    val v = t.compactZOrder("a", "b", targetFileRows = 200)
+    assert(store.fired, "the concurrent append never ran")
+    assert(ids(t) == ((1L to 400L) ++ (1001L to 1010L)).toSet)
+    assert(t.history.take(2).map(h => (h.version, h.operation)) ==
+      Seq((v, "zorder"), (v - 1, "append")))
+  }
+
+  test("compactWhere racing DROP COLUMN fails loudly and never brings the column back") {
+    val (t, store) = racingTable("graft-droprace")
+    store.arm(() => { GraftTable(spark, t.root).dropColumn("v"); () })
+    val e = intercept[java.util.ConcurrentModificationException] {
+      t.compactWhere("id >= 1", targetFileRows = 1000)
+    }
+    assert(e.getMessage.contains("re-mapped column(s) v"), e.getMessage)
+    assert(t.scan.columns.toSeq == Seq("id", "a", "b"))
+    assert(ids(t) == (1L to 400L).toSet)
+  }
+
+  test("REORG PURGE on a clustered partitioned table honours targetFileRows") {
+    val t = GraftTable(spark, Files.createTempDirectory("graft-purgep").toString)
+    t.overwritePartitioned(
+      (1L to 400L).map(i => (i, i % 4, s"v$i")).toDF("id", "p", "v"), Seq("p"), Seq("id"))
+    t.delete("id % 10 = 0", deletionVectors = Some(true))
+    val live = t.latestManifest.get.allRows
+    val before = t.latestManifest.get.files.map(_.path).toSet
+    t.reorgPurge(targetFileRows = 200)
+    val added = t.latestManifest.get.files.filterNot(f => before.contains(f.path))
+    assert(added.nonEmpty && added.forall(_.dv.isEmpty))
+    assert(added.size <= math.ceil(live / 200.0).toInt,
+      s"purge wrote ${added.size} files for $live live rows at 200 rows/file")
+    assert(ids(t) == (1L to 400L).filterNot(_ % 10 == 0).toSet)
   }
 }

@@ -126,4 +126,11 @@ class PercentilesSpec extends AnyFunSuite {
     assert(probes.nonEmpty, "the sketch-tier probe never ran")
     assert(probes.forall(_.contains("GlobalLimit 9")), probes.mkString("\n"))
   }
+
+  test("the sort plan refuses an input column named like its helper column") {
+    val df = Seq(("g", 1.0, 3L), ("g", 2.0, 4L)).toDF("grp", "v", "__rn")
+    val e = intercept[IllegalArgumentException](
+      Percentiles.exactBySort(df, "grp", "v", Seq(0.5 -> "p50")))
+    assert(e.getMessage.contains("__rn"), e.getMessage)
+  }
 }
