@@ -99,15 +99,14 @@ class ConfigStore(spark: SparkSession, root: String) {
         WatermarkRecord(id, entityId, None, Some(watermark.toLong), now, None)
       else
         WatermarkRecord(id, entityId, Some(Timestamp.valueOf(watermark + (if (watermark.length <= 10) " 00:00:00" else ""))), None, now, None)
-    var attempts = 0
-    while (true) {
-      val base = watermarksTable.latestManifest
-      val candidateId = base.map(_.version).getOrElse(0L) + 1L
+    watermarksTable.optimisticCommit() { base =>
+      // id = the version this attempt would land, so a lost race
+      // re-renders the record (the orphaned data file is vacuumed later)
+      val r = record(base.map(_.version).getOrElse(0L) + 1L)
       // control writes are ONE row: the driver-side local writer skips
       // the ~100-150 ms Spark write command entirely (the protocol pays
       // two control writes per load cycle — at NRT cadence that fixed
       // overhead IS the control plane's cost)
-      val r = record(candidateId)
       val files = watermarksTable.writeLocalRows(
         watermarkSchema,
         Seq(org.apache.spark.sql.Row(
@@ -115,27 +114,9 @@ class ConfigStore(spark: SparkSession, root: String) {
           r.ctWatermark.map(Long.box).orNull,
           r.loadStartDatetime, r.loadEndDatetime.orNull)),
         Nil)
-      try {
-        val schema = base.map(m =>
-          GraftTable.unionSchema(
-            org.apache.spark.sql.types.StructType.fromDDL(m.schema),
-            watermarkSchema))
-          .getOrElse(watermarkSchema)
-        watermarksTable.commitSet(
-          schema, graft.sources.FileSet(
-            base.flatMap(_.chunks).getOrElse(Nil),
-            base.map(_.files).getOrElse(Nil) ++ files),
-          base.map(_.version), op = "append")
-        return candidateId
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          // lost the version race — the orphaned data file is vacuumed
-          // later; re-render with the next id and retry
-          attempts += 1
-          if (attempts >= 50) throw e
-      }
+      watermarksTable.commitAppend(base, base, watermarkSchema, files)
+      r.watermarkId
     }
-    -1L // unreachable
   }
 
   /** dbo.CloseWatermark (dbrconfig.sql:85-91): stamp LoadEndDatetime —
@@ -150,9 +131,8 @@ class ConfigStore(spark: SparkSession, root: String) {
     // erased). A lost race re-reads and retries; each watermark id is
     // touched by one loader, so retries commute. (The data path uses
     // the real merge — see SilverLoader.)
-    var attempts = 0
-    while (attempts < 50) {
-      val base = watermarksTable.latestManifest.getOrElse(
+    watermarksTable.optimisticCommit() { at =>
+      val base = at.getOrElse(
         throw new IllegalStateException(s"closeWatermark($watermarkId) before any open"))
       // the table is tiny (vacuumed to a bounded window): collect it,
       // stamp the close driver-side, land ONE file through the local
@@ -169,15 +149,10 @@ class ConfigStore(spark: SparkSession, root: String) {
           else r
         }
       val files = watermarksTable.writeLocalRows(schema, updatedRows, Nil)
-      try {
-        watermarksTable.commit(
-          org.apache.spark.sql.types.StructType.fromDDL(base.schema), files,
-          Some(base.version), op = "overwrite")
-        return
-      } catch { case _: java.util.ConcurrentModificationException => attempts += 1 }
+      // the rows land under the base's column mapping, so it stays
+      watermarksTable.commit(schema, files, Some(base.version), op = "overwrite",
+        mappingOverride = Some((base.mapping, base.retired.getOrElse(Nil))))
     }
-    throw new java.util.ConcurrentModificationException(
-      s"closeWatermark($watermarkId): pathological contention on $root")
   }
 
   /** Bound control-plane metadata growth (called by SilverLoader.run

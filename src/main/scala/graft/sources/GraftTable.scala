@@ -114,6 +114,14 @@ case class Chunk(files: Seq[ManifestFile])
   */
 private[graft] case class FileSet(kept: Seq[ChunkRef], fresh: Seq[ManifestFile])
 
+/** A lost manifest put-if-absent: another writer committed the version
+  * first. The one failure [[GraftTable.optimisticCommit]] retries; a
+  * writer's own conflict verdict is a plain
+  * [[java.util.ConcurrentModificationException]] and is not retried.
+  */
+private[graft] final class LostCommitRace(msg: String)
+    extends java.util.ConcurrentModificationException(msg)
+
 /** Sidecar (`_segment.json`) of one compacted change-feed segment: the
   * exact commit versions whose change data the segment holds (a plain
   * [from,to] range cannot distinguish feed-off writers' versions from
@@ -2223,6 +2231,65 @@ class GraftTable(
           s"files were written; re-run the $op against the current schema")
   }
 
+  /** The one lost-race policy of every version-log writer (optimistic
+    * concurrency, as in Delta's commit protocol): run `attempt` against
+    * a base — `first` on the first try, the re-read latest manifest after
+    * every loss — and retry while it loses the manifest put-if-absent.
+    * The attempt owns its writer's conflict checks; a conflict it throws
+    * is a verdict, not a lost race, and propagates at once. After 50
+    * losses the last one is rethrown. No backoff.
+    */
+  private[graft] def optimisticCommit[T](first: => Option[Manifest] = latestManifest)(
+      attempt: Option[Manifest] => T): T = {
+    var losses = 0
+    var base = first
+    while (true) {
+      try return attempt(base)
+      catch {
+        case e: LostCommitRace =>
+          losses += 1
+          if (losses >= 50) throw e
+          base = latestManifest
+      }
+    }
+    throw new IllegalStateException("unreachable")
+  }
+
+  /** One append commit of already-written `files` onto `base` — a batch
+    * with columns `batch`, written against `written` (its physical names
+    * and, for columns the table had, its types). The schema unions the
+    * batch in (pv-ordered); the base's chunks ride by reference and only
+    * the inline delta is re-listed. Single-shot: run it inside
+    * [[optimisticCommit]]. When the base moved after the files were
+    * written, a concurrent schema change that re-mapped a batch column,
+    * or retyped it to anything but a lossless widening, fails as a
+    * conflict instead of landing files that read as NULL or not at all.
+    */
+  private[graft] def commitAppend(
+      base: Option[Manifest], written: Option[Manifest], batch: StructType,
+      files: Seq[ManifestFile], txn: Option[String] = None,
+      txnApp: Option[String] = None, what: String = "append"): Long = {
+    def unioned(m: Option[Manifest]) =
+      m.map(b => unionSchema(StructType.fromDDL(b.schema), batch)).getOrElse(batch)
+    val schema = GraftTable.pvOrdered(unioned(base), base.map(pvPartitionCols).getOrElse(Nil))
+    if (base.map(_.version) != written.map(_.version)) {
+      val cols = batch.fieldNames.toSeq
+      requireMappingStable(what, cols, GraftTable.derivedMapping(cols, written), schema, base)
+      val (was, now) = (unioned(written), schema)
+      val retyped = cols.filterNot(c => was(c).dataType == now(c).dataType ||
+        isWideningSafe(was(c).dataType, now(c).dataType))
+      if (retyped.nonEmpty)
+        throw new java.util.ConcurrentModificationException(
+          s"$what conflict at $root: a concurrent schema change retyped column(s) " +
+            s"${retyped.mkString(", ")} after this commit's files were written; " +
+            s"re-run the $what against the current schema")
+    }
+    commitSet(schema,
+      FileSet(base.flatMap(_.chunks).getOrElse(Nil), base.map(_.files).getOrElse(Nil) ++ files),
+      base.map(_.version), op = "append",
+      partitionCols = base.flatMap(_.partitionCols), txn = txn, txnApp = txnApp)
+  }
+
   private def appendImpl(
       dfIn: DataFrame, statsColsIn: Seq[String], changeFeedOn: Boolean,
       txn: Option[String] = None, txnApp: Option[String] = None): Long = {
@@ -2253,9 +2320,8 @@ class GraftTable(
       }
     val pCols = wbase.flatMap(_.partitionCols).getOrElse(Nil)
       .filter(c => dfP.columns.exists(_.equalsIgnoreCase(c)))
-    // physical naming from the base at WRITE time; the retry loop below
-    // may rebase the commit, and before committing onto a MOVED base
-    // [[requireMappingStable]] re-checks these physical names
+    // physical naming from the base at WRITE time; the commit may rebase,
+    // and [[commitAppend]] re-checks these names against a MOVED base
     val writtenMapping = GraftTable.derivedMapping(dfP.columns.toSeq, wbase)
     // existing columns keep the TABLE's declared type — an appended
     // batch with a drifted type is cast, not landed verbatim
@@ -2284,37 +2350,14 @@ class GraftTable(
       else if (pvCols.nonEmpty) Some(stageChangeFeed(
         dfP.withColumn("_change_type", lit("insert")), wbase))
       else Some(stageChangeFeedLinks(files))
-    var attempts = 0
-    while (true) {
-      val base = latestManifest
-      val mergedSchema = GraftTable.pvOrdered(
-        base.map(m => unionSchema(StructType.fromDDL(m.schema), dfP.schema))
-          .getOrElse(dfP.schema),
-        base.map(pvPartitionCols).getOrElse(Nil))
-      if (base.map(_.version) != wbase.map(_.version))
-        requireMappingStable("append", dfP.columns.toSeq, writtenMapping,
-          mergedSchema, base)
-      try {
-        // chunk-local: the base's chunks ride by reference; only the
-        // inline delta (base inline + this batch) is re-listed
-        val v = commitSet(mergedSchema,
-          FileSet(base.flatMap(_.chunks).getOrElse(Nil),
-            base.map(_.files).getOrElse(Nil) ++ files),
-          base.map(_.version), op = "append",
-          partitionCols = base.flatMap(_.partitionCols), txn = txn,
-          txnApp = txnApp)
-        // publish under the version that actually LANDED (a lost race
-        // rebases the commit to a later version)
-        staged.foreach(publishChangeFeed(v, _))
-        maybeAutoCompact()
-        return v
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempts += 1
-          if (attempts >= 50) throw e // pathological contention — give up
-      }
+    val v = optimisticCommit() { base =>
+      commitAppend(base, wbase, dfP.schema, files, txn, txnApp)
     }
-    -1L // unreachable
+    // publish under the version that actually LANDED (a lost race
+    // rebases the commit to a later version)
+    staged.foreach(publishChangeFeed(v, _))
+    maybeAutoCompact()
+    v
   }
 
   /** COPY INTO (Delta parity): append an existing parquet DIRECTORY's
@@ -2450,37 +2493,12 @@ class GraftTable(
         // (exactMatch implies identity mapping, so logical == physical)
         val entries = attachBlooms(Paths.get(root, importDir),
           manifestEntries(linked, wantedStats), srcSchema.fieldNames.toSeq)
-        var attempts = 0
-        var landed = -1L
-        while (landed < 0) {
-          val base = latestManifest.get
-          // rebase guard (mirrors appendImpl): the linked files carry the
-          // schema's LOGICAL names physically, which is only readable
-          // while the mapping stays identity and the schema still matches
-          // by name+type. A concurrent RENAME/DROP/REPLACE between the
-          // exactMatch probe and this commit invalidates that — fail as a
-          // conflict (outside the retry catch: re-running COPY INTO is
-          // the fix, and per-file idempotence makes that safe) rather
-          // than landing files whose columns would read as NULL.
-          if (base.version != m.version &&
-              (base.mapping.nonEmpty || !StructType.fromDDL(base.schema)
-                .forall(f => srcSchema.find(_.name == f.name)
-                  .exists(_.dataType == f.dataType))))
-            throw new java.util.ConcurrentModificationException(
-              s"COPY INTO conflict at $root: a concurrent schema change " +
-                "landed after the source files were matched; re-run COPY " +
-                "INTO against the current schema")
-          try landed = commitSet(StructType.fromDDL(base.schema),
-            FileSet(base.chunks.getOrElse(Nil), base.files ++ entries),
-            Some(base.version), op = "append",
-            partitionCols = base.partitionCols,
-            mappingOverride = Some((base.mapping, base.retired.getOrElse(Nil))))
-          catch {
-            case e: java.util.ConcurrentModificationException =>
-              attempts += 1; if (attempts >= 50) throw e
-          }
+        // the linked files carry the schema's LOGICAL names physically;
+        // a re-mapping or retyping race fails as a conflict (re-running
+        // COPY INTO is the fix, and per-file idempotence makes it safe)
+        optimisticCommit() { base =>
+          commitAppend(base, Some(m), srcSchema, entries, what = "COPY INTO")
         }
-        landed
       } else {
         // one casting pass through the append funnel (store-assignment
         // semantics, NULL backfill — the table schema stays authoritative).
@@ -3016,26 +3034,16 @@ class GraftTable(
     * existing files need no rewrite — Delta's backfill shape). Idempotent;
     * retries through concurrent commits like any other writer.
     */
-  def enableRowTracking(): Long = {
-    var attempts = 0
-    while (true) {
-      val m = latestManifest.getOrElse(throw new IllegalStateException(
-        s"enableRowTracking on uncommitted table $root"))
-      if (m.rowTracking) return m.version
-      try {
-        return commitSet(StructType.fromDDL(m.schema),
-          FileSet(Nil, filesOf(m)), Some(m.version),
-          op = "enableRowTracking", partitionCols = m.partitionCols,
-          mappingOverride = Some((m.mapping, m.retired.getOrElse(Nil))),
-          rowTrackingSeed = Some(0L))
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempts += 1
-          if (attempts >= 50) throw e
-        // re-list from the winner (its commit may have added files)
-      }
-    }
-    -1L // unreachable
+  def enableRowTracking(): Long = optimisticCommit() { at =>
+    // a lost race re-lists from the winner (its commit may have added files)
+    val m = at.getOrElse(throw new IllegalStateException(
+      s"enableRowTracking on uncommitted table $root"))
+    if (m.rowTracking) m.version
+    else commitSet(StructType.fromDDL(m.schema),
+      FileSet(Nil, filesOf(m)), Some(m.version),
+      op = "enableRowTracking", partitionCols = m.partitionCols,
+      mappingOverride = Some((m.mapping, m.retired.getOrElse(Nil))),
+      rowTrackingSeed = Some(0L))
   }
 
   /** Whether stable row ids are tracked on the latest version. */
@@ -4387,8 +4395,31 @@ class GraftTable(
       op: String = "merge"): Long = {
     val origin = manifest(baseVersion)
     var base = origin
-    var attempts = 0
-    while (true) {
+    optimisticCommit(Some(origin)) { at =>
+      val latest = at.get // the origin, or the version that beat it
+      if (latest.version != base.version) {
+        // a concurrent merge-on-read DELETE leaves the path in place but
+        // moves its DV — for conflict purposes that file was removed AND
+        // re-added (two DV deletes of one file must not silently clobber
+        // each other's masks, exactly as two rewrites of one file must not)
+        val (removed, addedMeanwhile) = filesDelta(Some(base), latest)
+        val removedMeanwhile = removed.map(_.path).toSet
+        if (removedMeanwhile.exists(replaced.contains))
+          throw new java.util.ConcurrentModificationException(
+            s"merge conflict at $root: a concurrent commit rewrote file(s) " +
+              s"this merge also rewrote (e.g. ${removedMeanwhile.find(replaced.contains).get})")
+        addedMeanwhile.find(mayConflict).foreach { f =>
+          throw new java.util.ConcurrentModificationException(
+            s"merge conflict at $root: concurrent commit added ${f.path} " +
+              "whose key range overlaps this merge's source batch")
+        }
+        // `added` was written under the origin's physical names
+        requireMappingStable(op, schema.fieldNames.toSeq,
+          GraftTable.derivedMapping(schema.fieldNames.toSeq, Some(origin)),
+          GraftTable.unionSchema(StructType.fromDDL(latest.schema), schema),
+          Some(latest))
+        base = latest // disjoint — rebase
+      }
       // chunk-local rewrite: a chunk none of whose files were replaced
       // rides by reference (zero read-back into the manifest, zero
       // write); only touched chunks are re-listed minus their replaced
@@ -4405,39 +4436,10 @@ class GraftTable(
       // stale schema would silently drop the concurrent commit's columns
       // from every future read, so union with the rebased-on schema
       val outSchema = GraftTable.unionSchema(StructType.fromDDL(base.schema), schema)
-      try {
-        return commitSet(outSchema, FileSet(untouchedRefs, kept ++ added),
-          Some(base.version), op = op,
-          partitionCols = base.partitionCols, txn = txn, txnApp = txnApp)
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempts += 1
-          if (attempts >= 50) throw e // pathological contention
-          val latest = manifest(latestVersion.getOrElse(throw e))
-          // a concurrent merge-on-read DELETE leaves the path in place but
-          // moves its DV — for conflict purposes that file was removed AND
-          // re-added (two DV deletes of one file must not silently clobber
-          // each other's masks, exactly as two rewrites of one file must not)
-          val (removed, addedMeanwhile) = filesDelta(Some(base), latest)
-          val removedMeanwhile = removed.map(_.path).toSet
-          if (removedMeanwhile.exists(replaced.contains))
-            throw new java.util.ConcurrentModificationException(
-              s"merge conflict at $root: a concurrent commit rewrote file(s) " +
-                s"this merge also rewrote (e.g. ${removedMeanwhile.find(replaced.contains).get})")
-          addedMeanwhile.find(mayConflict).foreach { f =>
-            throw new java.util.ConcurrentModificationException(
-              s"merge conflict at $root: concurrent commit added ${f.path} " +
-                "whose key range overlaps this merge's source batch")
-          }
-          // `added` was written under the origin's physical names
-          requireMappingStable(op, schema.fieldNames.toSeq,
-            GraftTable.derivedMapping(schema.fieldNames.toSeq, Some(origin)),
-            GraftTable.unionSchema(StructType.fromDDL(latest.schema), schema),
-            Some(latest))
-          base = latest // disjoint — rebase and retry
-      }
+      commitSet(outSchema, FileSet(untouchedRefs, kept ++ added),
+        Some(base.version), op = op,
+        partitionCols = base.partitionCols, txn = txn, txnApp = txnApp)
     }
-    -1L // unreachable
   }
 
   /** Write df as parquet under data/<uuid>/ and return manifest entries
@@ -4513,16 +4515,21 @@ class GraftTable(
     * cost. Falls back to the full funnel when the table carries any
     * funnel-enforced feature (CHECKs, column mapping, generated or
     * identity columns): those guarantees live in [[writeDataFiles]] and
-    * must not be bypassable.
+    * must not be bypassable. Mapped columns land under the physical
+    * names the latest manifest derives for them, so the commit must
+    * carry that mapping (an append derives it; an overwrite passes it).
     */
   private[graft] def writeLocalRows(
       schema: StructType, rows: Seq[org.apache.spark.sql.Row],
       statsColsLogical: Seq[String]): Seq[ManifestFile] = {
+    // the physical names the commit will derive for these columns (a
+    // column dropped and re-added reads from a fresh physical name)
+    lazy val mapping = GraftTable.derivedMapping(schema.fieldNames.toSeq, latestManifest)
     if (checks.nonEmpty || generatedCols.nonEmpty || identityCols.nonEmpty ||
-      latestManifest.exists(_.mapping.nonEmpty))
+      mapping.nonEmpty)
       return writeDataFiles(
         spark.createDataFrame(rows.asJava, schema).coalesce(1),
-        statsColsLogical)
+        statsColsLogical, mapping)
     val batch = UUID.randomUUID().toString.take(12)
     val outDir = dataDir.resolve(batch)
     Files.createDirectories(outDir)
@@ -4976,8 +4983,7 @@ class GraftTable(
     // silent replace) and the caller re-reads + retries/rebases. See
     // [[CommitStore.putIfAbsent]] for the local/object-store mapping.
     if (!store.putIfAbsent(target, json))
-      throw new java.util.ConcurrentModificationException(
-        s"version $next already committed at $root")
+      throw new LostCommitRace(s"version $next already committed at $root")
     // advisory pointer AFTER the decisive put: a crash in between
     // leaves it ≤1 version stale, which resolution's forward probe
     // covers; two finishers racing the replace can order it backward,

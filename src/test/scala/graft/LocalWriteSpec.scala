@@ -105,4 +105,19 @@ class LocalWriteSpec extends AnyFunSuite {
     assert(w2.getAs[Timestamp]("DateWatermark") ===
       Timestamp.valueOf("2024-05-01 12:00:00"))
   }
+
+  test("a dropped and re-added CTWatermark keeps the opened value through the close") {
+    val tmp = Files.createTempDirectory("graft-lw5").toString
+    val cs = new ConfigStore(spark, s"$tmp/control")
+    cs.registerEntities(Seq(Entity(
+      1L, "e", "db.e", "src", "silver", "CT", None, "id")))
+    cs.closeWatermark(cs.openWatermark(1L, "CT", "5"))
+    cs.watermarksTable.dropColumn("CTWatermark")
+    cs.watermarksTable.addColumn("CTWatermark", "BIGINT")
+    assert(cs.watermarksTable.latestManifest.get.mapping.get("CTWatermark")
+      .contains("CTWatermark_2"))
+    cs.closeWatermark(cs.openWatermark(1L, "CT", "42"))
+    assert(cs.entitiesWithWatermarks().select("Watermark").collect()
+      .map(_.getString(0)).toSeq === Seq("42"))
+  }
 }

@@ -23,10 +23,13 @@ SPARK_SUBMIT="${SPARK_SUBMIT:-/opt/spark/bin/spark-submit}"
 CPUS="${SPARK_GRAFT_CPUS:-32}"
 
 build() { # $1 = side name, $2 = ref
-  local side="$1" ref="$2"
-  echo "[ab] clone+build $side = $(git -C "$REPO" rev-parse --short "$ref")" >&2
+  local side="$1" sha
+  sha="$(git -C "$REPO" rev-parse --verify "$2^{commit}")"
+  echo "[ab] clone+build $side = ${sha:0:7}" >&2
   git clone -q "$REPO" "$WORK/$side"
-  git -C "$WORK/$side" checkout -q "$ref"
+  # a commit no branch reaches (git stash create) is not cloned: fetch it
+  git -C "$WORK/$side" fetch -q "$REPO" "$sha"
+  git -C "$WORK/$side" checkout -q "$sha"
   # sbt package, NOT a hand-rolled jar of the classes dir: plain compile
   # does not copy src/main/resources, so the hand jar would drop
   # META-INF/services (the `graft` DataSourceRegister entry) and every
@@ -42,6 +45,10 @@ build new "$NEW_REF"
 run_pass() { # $1 = side, $2 = pass number
   local side="$1" p="$2"
   echo "[ab] pass $p/$PASSES: $side" >&2
+  # run from the side's own clone: Bench records `git rev-parse HEAD` of
+  # its working directory as bench_detail's "git", which must name the
+  # commit the jar was built from
+  (cd "$WORK/$side" &&
   SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="$CPUS" \
   SPARK_GRAFT_BENCH_RUNS=1 SPARK_GRAFT_BENCH_WARMUP=1 \
   SPARK_GRAFT_BENCH_DETAIL="$WORK/$side-p$p.json" \
@@ -49,7 +56,7 @@ run_pass() { # $1 = side, $2 = pass number
     --driver-memory "${SPARK_DRIVER_MEM:-8g}" \
     --conf spark.sql.shuffle.partitions=32 --conf spark.ui.enabled=false \
     --conf spark.sql.session.timeZone=UTC \
-    --class graft.Bench "$WORK/$side.jar" \
+    --class graft.Bench "$WORK/$side.jar") \
     >"$WORK/$side-p$p.log" 2>&1 ||
     { echo "[ab] $side pass $p FAILED — see $WORK/$side-p$p.log" >&2; exit 1; }
 }
