@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.sources.GraftTable
@@ -13,10 +12,10 @@ import graft.sources.GraftTable
   * centroid assignments).
   *
   * Per sync cycle only the CHANGED source rows are re-derived
-  * (insert/update from the feed's post-image, delete drops the key) —
-  * O(changes), never O(corpus). Each sync commit carries a txn marker
-  * keyed to the SOURCE version it caught up to, so replayed or racing
-  * syncs land exactly once.
+  * (insert/update from the feed's post-image; a delete, or an UPDATE
+  * that moved the key away, drops it) — O(changes), never O(corpus).
+  * Each sync commit carries a txn marker keyed to the SOURCE version it
+  * caught up to, so replayed or racing syncs land exactly once.
   *
   * Window versions WITHOUT stored change data are triaged by the
   * table's one commit-delta rule ([[GraftTable.rowDelta]]): a version
@@ -123,25 +122,16 @@ abstract class ChangeFeedFollower(
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           source.changeFeedSchema)
-    // one decision per key across the window: the LAST change wins.
-    // update_preimage rows are redundant for last-state sync (the
-    // postimage of the same version carries the new values) and would
-    // break per-(key, version) uniqueness — drop them first, after
-    // which the ordering is total again.
-    val w = Window.partitionBy(idCol).orderBy(col("_commit_version").desc)
-    val latest = changes
-      .filter(col("_change_type") =!= "update_preimage")
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-    val batch = latest.select(
-      col(idCol) +: deriveCols(latest) :+
+    // one decision per key across the window (the table's one net-change
+    // rule: a key that only left in its last commit comes out a delete),
+    // applied through the exactly-once upsert
+    val net = GraftTable.netChanges(changes, idCol)
+    val batch = net.select(
+      col(idCol) +: deriveCols(net) :+
         when(col("_change_type") === "delete", "D").otherwise("U").as("op"): _*)
     try
-      table.merge(batch, Seq(idCol))
-        .whenMatchedUpdateAll().whenNotMatchedInsertAll()
-        .whenMatchedDelete("op = 'D'")
-        .withTxn(appId, target)
-        .execute()
+      table.upsertOnce(batch, Seq(idCol), appId, s"$appId:$target",
+        deleteWhen = Some("op = 'D'"))
     catch {
       case e: java.util.ConcurrentModificationException =>
         // two syncs racing the same window apply the same keys and WILL

@@ -120,11 +120,10 @@ class ConfigStore(spark: SparkSession, root: String) {
   }
 
   /** dbo.CloseWatermark (dbrconfig.sql:85-91): stamp LoadEndDatetime —
-    * implemented as a merge on the watermark id (dogfooding the engine's
-    * own upsert).
+    * a collect of the whole control table and a one-file overwrite.
     */
   def closeWatermark(watermarkId: Long): Unit = synchronized {
-    // read-modify-overwrite of the (tiny) control table, committed
+    // read-modify-overwrite of the control table, committed
     // against the SAME version the modification read (a plain
     // `overwrite(snapshot...)` re-resolves the base at commit time, so a
     // concurrent open landing between read and commit would be silently
@@ -134,9 +133,9 @@ class ConfigStore(spark: SparkSession, root: String) {
     watermarksTable.optimisticCommit() { at =>
       val base = at.getOrElse(
         throw new IllegalStateException(s"closeWatermark($watermarkId) before any open"))
-      // the table is tiny (vacuumed to a bounded window): collect it,
-      // stamp the close driver-side, land ONE file through the local
-      // writer — one small read job instead of read + full write command
+      // collect the table (vacuum bounds its versions, not its rows, so
+      // this is O(watermarks ever opened)), stamp the close driver-side,
+      // land ONE file through the local writer — one small read job
       val schema = org.apache.spark.sql.types.StructType.fromDDL(base.schema)
       val idIdx = schema.fieldIndex("WatermarkId")
       val endIdx = schema.fieldIndex("LoadEndDatetime")

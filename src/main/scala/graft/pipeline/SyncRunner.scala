@@ -43,9 +43,10 @@ private[graft] class SimulatedCrash(where: String)
   * Crash between 5 and 6 leaves an open record the cursor read ignores:
   * the next cycle re-syncs from the OLD cursor and the identity-keyed
   * merge replays idempotently (re-upserts rewrite equal values in
-  * place; re-deletes find no match and the insert clause is gated on
-  * `_sync_action = 'upsert'`). A crash before the bootstrap's close
-  * re-runs the bootstrap as an overwrite — idempotent by construction.
+  * place; re-deletes find no match and the insert clause skips delete
+  * rows). A crash before the bootstrap's close leaves cursor 0, and
+  * `syncMirror` from 0 re-runs the bootstrap as an overwrite —
+  * idempotent by construction.
   * Effectively-once, same argument as SURVEY §2.9.
   */
 class SyncRunner(
@@ -79,18 +80,10 @@ class SyncRunner(
     if (now == since && mirror.exists)
       return SyncResult(entityId, since, since, "skip", None)
     val wmId = config.openWatermark(entityId, "CT", now.toString)
+    // cursor 0 with an existing mirror = a crash dropped the bootstrap's
+    // close: syncMirror re-runs the (idempotent) full overwrite
     val bootstrap = since == 0L || !mirror.exists
-    if (bootstrap) {
-      // cursor 0 with an existing mirror = a crash dropped the
-      // bootstrap's close — re-run the (idempotent) full overwrite;
-      // an incremental from 0 would need manifest(0), which never
-      // exists (versions start at 1)
-      mirror.overwriteStats(
-        source.snapshotWithRowIdsAt(now).drop(GraftTable.RowCommitOut),
-        Seq(GraftTable.RowIdOut))
-    } else {
-      source.syncMirror(mirror, since, Some(now))
-    }
+    source.syncMirror(mirror, since, Some(now))
     if (crashBeforeClose) throw new SimulatedCrash("between merge and close")
     config.closeWatermark(wmId)
     SyncResult(entityId, since, now,

@@ -38,8 +38,8 @@ import org.apache.spark.sql.types.StructType
   *    ignoreChanges contract); `option("ignoreDeletes", "true")` is the
   *    weaker escape that only SKIPS delete-only commits (TRUNCATE,
   *    whole-file retention deletes) and still fails on rewrites. For
-  *    row-accurate deltas use the stored change feed
-  *    ([[GraftTable.readChangeStream]]).
+  *    row-accurate deltas read the stored change feed with
+  *    `option("readChangeFeed", "true")` (loud on a feed-less rewrite).
   *
   * Offsets are table VERSIONS (durable, monotone), so checkpoint
   * restart resumes exactly: the recovered offset is the last version
@@ -380,8 +380,8 @@ class GraftStreamSource(
             throw new IllegalStateException(
               s"graft streaming source at $root: version $v ($op) $what; " +
                 s"the stream serves appends only. Either restart with $escape, " +
-                "or consume row-accurate changes via " +
-                "GraftTable.readChangeStream()")
+                "or consume row-accurate changes with " +
+                "option(\"readChangeFeed\", \"true\")")
           }
           // stream schema is fixed at start: any mid-stream schema change
           // (DROP/RENAME, ADD, type widening) on a version the stream will

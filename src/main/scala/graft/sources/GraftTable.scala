@@ -2019,6 +2019,33 @@ class GraftTable(
       (if (changeFeed) m2.withChangeFeed() else m2).withTxnMarker(appId, marker).execute()
     }
 
+  /** The change fold's apply: fold a window netted to one row per `key`
+    * ([[GraftTable.netChanges]]) into this table, under `txn` = (appId,
+    * marker) when given. A `_change_type = 'delete'` row deletes its key,
+    * any other upserts; `_change_type`/`_commit_version` are never stored.
+    * An absent table takes the non-delete rows as its first version (stats
+    * on `key`); otherwise one clause-form merge: matched delete → DELETE,
+    * matched → UPDATE payload, unmatched non-delete → INSERT payload + key.
+    */
+  private[graft] def applyChanges(
+      net: DataFrame, key: String, txn: Option[(String, String)]): Long = {
+    val rows = net.drop("_commit_version")
+    if (!exists)
+      overwriteStats(
+        rows.filter(col("_change_type") =!= "delete").drop("_change_type"),
+        Seq(key), txn = txn.map(_._2), txnApp = txn.map(_._1))
+    else {
+      val payload = rows.columns.toSeq.filterNot(Set("_change_type", key).contains)
+      val m = merge(rows, Seq(key))
+        .whenMatchedDeleteClause(Some("s._change_type = 'delete'"))
+        .whenMatchedUpdate(payload.map(c => c -> s"s.`$c`"))
+        .whenNotMatchedInsert(
+          payload.map(c => c -> s"s.`$c`") :+ (key -> s"s.`$key`"),
+          Some("s._change_type <> 'delete'"))
+      txn.fold(m) { case (app, marker) => m.withTxnMarker(app, marker) }.execute()
+    }
+  }
+
   /** Replace the table contents (ref :193 — first-load overwrite path). */
   def overwrite(df: DataFrame, statsCol: Option[String] = None): Long =
     overwriteStats(df, statsCol.toSeq)
@@ -3287,18 +3314,18 @@ class GraftTable(
   }
 
   /** Apply [[syncSince]] to a downstream mirror as one atomic
-    * identity-keyed merge and return the version the mirror is now
-    * synced TO (the caller's next cursor). A missing mirror bootstraps
-    * from the FULL pinned snapshot (ignoring `sinceVersion`) — the same
-    * first-call contract as the streaming gold mirror. Schema evolution
-    * since the last sync widens the mirror (nullable backfill), and the
-    * merge batches a key-rewriting update as the in-place upsert only
-    * an identity key can express.
+    * identity-keyed merge ([[applyChanges]]) and return the version the
+    * mirror is now synced TO (the caller's next cursor). A missing mirror
+    * or cursor 0 (a lost bootstrap close) bootstraps from the FULL pinned
+    * snapshot — the same first-call contract as the streaming gold
+    * mirror. Schema evolution since the last sync widens the mirror
+    * (nullable backfill), and the merge batches a key-rewriting update as
+    * the in-place upsert only an identity key can express.
     */
   def syncMirror(
       mirror: GraftTable, sinceVersion: Long,
       toVersion: Option[Long] = None): Long = {
-    if (!mirror.exists) {
+    if (sinceVersion == 0L || !mirror.exists) {
       val now = toVersion.orElse(latestVersion).getOrElse(
         throw new IllegalStateException(s"no committed version at $root"))
       // stats on the identity key: future sync merges prune on it
@@ -3311,15 +3338,11 @@ class GraftTable(
       case Some(to) => (to, syncHalves(sinceVersion, to))
       case None => syncSincePinned(sinceVersion)
     }
-    val payload = StructType.fromDDL(manifest(now).schema).fieldNames.toSeq
-    mirror.merge(changes.drop(GraftTable.RowCommitOut), Seq(GraftTable.RowIdOut))
-      .whenMatchedDeleteClause(Some("s._sync_action = 'delete'"))
-      .whenMatchedUpdate(payload.map(c => c -> s"s.`$c`"))
-      .whenNotMatchedInsert(
-        payload.map(c => c -> s"s.`$c`") :+
-          (GraftTable.RowIdOut -> s"s.`${GraftTable.RowIdOut}`"),
-        Some("s._sync_action = 'upsert'"))
-      .execute()
+    // the halves are disjoint, one row per id already: no netChanges
+    mirror.applyChanges(
+      changes.drop(GraftTable.RowCommitOut)
+        .withColumnRenamed("_sync_action", "_change_type"),
+      GraftTable.RowIdOut, txn = None)
     now
   }
 
@@ -5010,6 +5033,27 @@ object GraftTable {
 
   private[graft] def isRowFree(m: Manifest): Boolean =
     RowFreeOps.contains(m.operation.getOrElse("write"))
+
+  /** The one net-change rule: one row per `key` out of a window of change
+    * rows, the input of [[GraftTable.applyChanges]]. The newest
+    * `_commit_version` wins; inside one commit insert/update_postimage
+    * beats delete (a key-rewriting merge pairs both on one key), which
+    * beats update_preimage. A winning pre-image means the key moved away,
+    * so it comes out as a delete.
+    */
+  private[graft] def netChanges(changes: DataFrame, key: String): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(s"`$key`"))
+      .orderBy(col("_commit_version").desc,
+        when(col("_change_type") === "update_preimage", 0).otherwise(1).desc,
+        when(col("_change_type") === "delete", 0).otherwise(1).desc)
+    changes
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1).drop("__rn")
+      .withColumn("_change_type",
+        when(col("_change_type") === "update_preimage", "delete")
+          .otherwise(col("_change_type")))
+  }
 
   /** Type promotions the parquet reader serves natively from the OLD
     * physical encoding (verified against Spark 4.1's vectorized reader)

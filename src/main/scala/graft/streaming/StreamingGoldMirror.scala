@@ -69,72 +69,37 @@ class StreamingGoldMirror(
   def startSupervised(maxRestarts: Int = 3): SupervisedMirror =
     new SupervisedMirror(this, maxRestarts)
 
-  /** One micro-batch: reduce to the LATEST image per identity (a batch
-    * may span several commits for one row), then one atomic merge —
-    * delete-marked identities drop, everything else upserts in place.
+  /** One micro-batch through the table's change fold: net to one image
+    * per identity (a batch may span several commits for one row), then
+    * one atomic apply — deleted identities drop, the rest upsert.
     */
   private[graft] def applyBatch(batch: DataFrame, batchId: Long): Unit = {
     val gold = GraftTable(spark, goldRoot)
-    // replay-skip FIRST: it is a driver-only metadata check, while
-    // emptiness evaluates the whole micro-batch plan — checking
-    // emptiness before the skip billed a full batch computation to
-    // every checkpoint replay (guide §1: don't compute what you throw
-    // away)
-    if (gold.exists && gold.lastTxn(appId).exists(_ >= batchId)) return
-    // the batch plan evaluates several times below (emptiness probe,
-    // then the merge/overwrite whose own probes re-derive from it);
-    // each evaluation repeats the source's id-fill joins — persist once
-    // for the batch's lifetime (same rationale as MergeBuilder's
-    // derived-source persist), released in the finally
+    val marker = s"$appId:$batchId"
+    // replay-skip FIRST: a driver-only metadata check, while emptiness
+    // evaluates the whole micro-batch plan
+    if (gold.upsertLanded(appId, marker, Seq(GoldId), changeFeed = false).isDefined)
+      return
+    // the plan evaluates several times (emptiness, then the apply's own
+    // probes), each repeating the source's id-fill joins: persist once
     batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try applyBatchImpl(batch, batchId, gold)
-    finally batch.unpersist(false)
-  }
-
-  private def applyBatchImpl(
-      batch: DataFrame, batchId: Long, gold: GraftTable): Unit = {
-    if (batch.isEmpty) return
-    val payload = batch.columns.toSeq
-      .filterNot(Set("_change_type", "_commit_version", IdCol).contains)
-    // latest image per id: newest commit wins; inside one commit the
-    // post-image/insert/delete outranks its paired pre-image, and a
-    // non-delete outranks a delete — a key-rewriting merge surfaces as
-    // delete+insert of the SAME id in ONE commit (diffFrames pairs by
-    // pk, identity rides along), and that commit's net effect is the
-    // row surviving under its new key, never the delete winning.
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(s"`$IdCol`"))
-      .orderBy(col("_commit_version").desc,
-        when(col("_change_type") === "update_preimage", 0).otherwise(1).desc,
-        when(col("_change_type") === "delete", 0).otherwise(1).desc)
-    val latest = batch
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("_change_type") =!= "update_preimage")
-      .drop("__rn", "_commit_version")
+    try {
+      if (batch.isEmpty) return
       // identity IS the mirror key — a null id cannot be applied. The
       // native source serves complete ids on tracked tables; null here
       // means the feed predates tracking (start the stream past it).
-      .withColumn(IdCol,
+      // The guard reads the netted rows: applied before the window it
+      // changes the apply's Spark job plan.
+      val net = GraftTable.netChanges(batch, IdCol).withColumn(IdCol,
         when(col(s"`$IdCol`").isNull, raise_error(lit(
           s"StreamingGoldMirror at $goldRoot: change row with null $IdCol " +
             "— the silver feed predates row tracking; start with " +
             "option(\"startingVersion\") past the enablement")))
           .otherwise(col(s"`$IdCol`")))
-    val keyed =
-      if (GoldId == IdCol) latest else latest.withColumnRenamed(IdCol, GoldId)
-    if (!gold.exists) {
-      gold.overwriteStats(
-        keyed.filter(col("_change_type") =!= "delete").drop("_change_type"),
-        Seq(GoldId), txn = Some(s"$appId:$batchId"), txnApp = Some(appId))
-    } else {
-      gold.merge(keyed, Seq(GoldId))
-        .whenMatchedDeleteClause(Some("s._change_type = 'delete'"))
-        .whenMatchedUpdate(payload.map(c => c -> s"s.`$c`"))
-        .whenNotMatchedInsert(
-          payload.map(c => c -> s"s.`$c`") :+ (GoldId -> s"s.`$GoldId`"),
-          Some("s._change_type <> 'delete'"))
-        .withTxn(appId, batchId).execute()
-    }
+      gold.applyChanges(
+        if (GoldId == IdCol) net else net.withColumnRenamed(IdCol, GoldId),
+        GoldId, Some(appId -> marker))
+    } finally batch.unpersist(false)
   }
 }
 

@@ -73,6 +73,21 @@ class SketchStoreSpec extends AnyFunSuite {
     assert(store.table.latestVersion == vBefore)
   }
 
+  test("a key an UPDATE moved away leaves the store") {
+    val (silverRoot, sketchRoot) = newRoots()
+    val silver = GraftTable(spark, silverRoot)
+    val store = new SketchStore(spark, sketchRoot, "doc_id", "text")
+    silver.overwriteStats(docs.filter(col("doc_id") < 100), Seq("doc_id"))
+    silver.publishInitialSnapshot()
+    store.syncFrom(silver)
+
+    // the feed carries the old key only as an update_preimage
+    silver.update(Map("doc_id" -> "doc_id + 1000"), "doc_id < 10", changeFeed = true)
+    assert(store.syncFrom(silver) == silver.latestVersion.get)
+    assert(storedSigs(store) == freshSigs(silver.snapshot))
+    assert(store.sigs.filter(col("id") < 10).count() == 0)
+  }
+
   test("unpublishable window versions trigger a full resync (overwrite/append)") {
     val (silverRoot, sketchRoot) = newRoots()
     val silver = GraftTable(spark, silverRoot)

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{ConfigStore, Entity, SimulatedCrash, SyncRunner}
@@ -89,6 +90,22 @@ class SyncRunnerSpec extends AnyFunSuite {
     val r = new SyncRunner(spark, config, source, mirror, 7L).runOnce()
     assert(r.action == "bootstrap", "cursor 0 + existing mirror = re-bootstrap")
     assert(rowsOf(mirror) == rowsOf(source))
+  }
+
+  test("syncMirror from cursor 0 onto an existing mirror re-bootstraps") {
+    val (_, source, mirror, runner) = fixture()
+    // the bootstrap landed, its close did not: cursor 0, mirror exists
+    intercept[SimulatedCrash] { runner.runOnceImpl(crashBeforeClose = true) }
+    assert(runner.cursor == 0L && mirror.exists)
+    source.delete("k = 2")
+    source.append(Seq((4L, "d")).toDF("k", "v"))
+    val now = source.latestVersion.get
+
+    assert(source.syncMirror(mirror, 0L, Some(now)) == now)
+    val want = source.snapshotWithRowIdsAt(now).drop(GraftTable.RowCommitOut)
+    val got = mirror.snapshot.select(want.columns.map(c => col(s"`$c`")).toIndexedSeq: _*)
+    assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty)
+    assert(rowsOf(mirror) == Set((1L, "a"), (3L, "c"), (4L, "d")))
   }
 
   test("orchestrator: per-entity cursors advance independently across a sweep") {
